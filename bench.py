@@ -126,45 +126,41 @@ def build_frontier_state(spark, n_urls: int) -> dict:
     )
     bloom_df = seen_mod.build_bloom(seen_tbl).persist()
     bloom_df.count()  # force state build (bitmaps stay executor-side)
-    exact_join = os.environ.get("BENCH_EXACT_JOIN", "prebuilt")
-    exact_idx = None
-    if exact_join == "prebuilt":
-        exact_idx = seen_mod.build_exact_index(seen_tbl).persist()
-        exact_idx.count()
+    exact_idx = seen_mod.build_exact_index(seen_tbl).persist()
+    exact_idx.count()
     seen_tbl.count()
     return {
         "n_urls": n_urls, "n_hosts": n_hosts, "seen_tbl": seen_tbl,
-        "bloom_df": bloom_df, "exact_idx": exact_idx, "exact_join": exact_join,
+        "bloom_df": bloom_df, "exact_idx": exact_idx,
     }
 
 
 def release_frontier_state(state: dict) -> None:
     state["seen_tbl"].unpersist()
     state["bloom_df"].unpersist()
-    if state["exact_idx"] is not None:
-        state["exact_idx"].unpersist()
+    state["exact_idx"].unpersist()
 
 
 def frontier_throughput(spark, n_urls: int, state: dict | None = None) -> tuple[float, int]:
     """Scheduled URLs/sec for one full scheduling pass at n_urls seeds.
 
     Measured composition = frontier.schedule_seed_list: canonicalize →
-    bloom tag + null-key broadcast exact anti-join (all narrow) →
-    politeness with fused in-exchange dedupe. The seed payload crosses
-    ONE exchange; the earlier standalone-dedupe pipeline paid an extra
-    full url_hash exchange plus two SortAggregate sorts for the same
-    output.
+    bloom + sorted-shard exact seen filter in one pandas UDF (all
+    narrow) → politeness with fused in-exchange dedupe. The seed payload
+    crosses ONE exchange; the earlier standalone-dedupe pipeline paid an
+    extra full url_hash exchange plus two SortAggregate sorts for the
+    same output.
 
-    The seen set and its bloom are PRE-EXISTING STATE, built outside the
-    timed region: the generation loop maintains both incrementally in
-    the SnapshotStore (seen appends + per-generation bloom deltas,
-    seen.merge_bloom) — a scheduling pass never reconstructs them from
-    raw URLs, so timing that reconstruction would measure one-time state
-    build, not scheduling throughput. What stays inside the timed
-    region is everything a pass actually pays: the 8 MB bitmap and
-    ~32 MB exact-index collect+broadcast (or, under the join
-    strategies, the exact-side broadcast/shuffle), canonicalize,
-    in-batch dedupe, seen filter, and the politeness top-B."""
+    The seen set, its bloom and its exact index are PRE-EXISTING STATE,
+    built outside the timed region: the generation loop maintains them
+    incrementally in the SnapshotStore (seen appends + per-generation
+    bloom and index deltas, seen.SeenIndexTable) — a scheduling pass
+    never reconstructs them from raw URLs, so timing that reconstruction
+    would measure one-time state build, not scheduling throughput. What
+    stays inside the timed region is everything a pass actually pays:
+    the 8 MB bitmap and ~32 MB exact-index collect+broadcast,
+    canonicalize, in-batch dedupe, seen filter, and the politeness
+    top-B."""
     from pyspark.sql import functions as F
 
     from post_processor_spark import fixtures, frontier
@@ -197,7 +193,7 @@ def frontier_throughput(spark, n_urls: int, state: dict | None = None) -> tuple[
     scheduled = frontier.schedule_seed_list(
         seeds, state["seen_tbl"], generation=1, budget_per_host=64,
         salt_parts=64, bloom=state["bloom_df"],
-        exact_join=state["exact_join"], exact_index=state["exact_idx"],
+        exact_join="prebuilt", exact_index=state["exact_idx"],
     ).filter(F.col("status") == "scheduled")
     n_scheduled = scheduled.count()
     dt = time.time() - t0

@@ -30,17 +30,18 @@ Spark-first design:
 
 from __future__ import annotations
 
+import logging
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import canon
-from .seen import (
-    build_bloom, build_exact_index, filter_unseen, merge_bloom,
-    merge_exact_index,
-)
+from .seen import SeenIndexTable, build_bloom, filter_unseen
 from .state import SnapshotStore
+
+log = logging.getLogger(__name__)
 
 # fixed, documented epoch for deterministic not_before timestamps
 _BASE_EPOCH = 1_700_000_000  # 2023-11-14T22:13:20Z
@@ -477,28 +478,27 @@ def schedule_seed_list(
     salt_parts: int = 16,
     bloom: DataFrame | None = None,
     skew_threshold: int | None = None,
-    exact_join: str = "broadcast_fused",
+    exact_join: str = "prebuilt",
     exact_index: DataFrame | None = None,
 ) -> DataFrame:
     """One-exchange scheduling of a fresh seed list against an existing
     seen set — the bench-headline composition, and the fast path for
     'here are N new URLs, schedule the polite top-B per host':
 
-      canonicalize (narrow) → bloom tag + null-key broadcast exact
-      anti-join (narrow) → politeness with FUSED dedupe (dedupe + rank
-      windows share one host-partitioned exchange per skew branch).
+      canonicalize (narrow) → bloom + exact seen filter (narrow) →
+      politeness with FUSED dedupe (dedupe + rank windows share one
+      host-partitioned exchange per skew branch).
 
     The seed payload crosses exactly ONE exchange. The default
-    exact_join='broadcast_fused' requires the seen side to fit a
-    broadcast; 'shuffle_hash' resolves the maybe-seen subset with a
-    parallel shuffle-hash anti-join instead (no serial broadcast build —
-    see seen.filter_unseen); 'prebuilt' takes the incrementally
-    maintained sorted-shard exact index (seen.build_exact_index) and
-    resolves bloom + exact membership in one narrow pandas UDF — no
-    join operator, no per-pass hash-relation build; at a 10^10-row seen
-    set use the generation loop's branch path + bucketed layout instead. Result rows are
-    persisted (the politeness census + both skew branches consume them);
-    callers own unpersist/clearCache."""
+    exact_join='prebuilt' takes the incrementally maintained sorted-shard
+    exact index (seen.build_exact_index; built from `seen` when
+    exact_index is omitted) and resolves bloom + exact membership in one
+    narrow pandas UDF — no join operator, no per-pass hash-relation
+    build. It requires the index to fit executor memory; at a
+    10^10-row seen set use exact_join='branch' + the bucketed layout
+    (see seen.filter_unseen). Result rows are persisted (the politeness
+    census + both skew branches consume them); callers own
+    unpersist/clearCache."""
     from .seen import filter_unseen as _filter_unseen
 
     # delta-encode BEFORE the persist: the cached unseen frame then
@@ -550,12 +550,22 @@ def _observed(obs: Observation, defaults: dict) -> dict:
     input is provably empty at runtime (e.g. the scheduled-rows filter
     in a generation where robots blocked every pending row); the JVM
     Observation then completes with a schemaless empty row that
-    Observation.get cannot convert. Elimination only happens when the
-    observed input was empty, so each defaulted value must be the
-    observed aggregate's empty-input result (counts/sums → 0)."""
+    Observation.get cannot convert (PythonSQLUtils.toPyRow fails its
+    schema assertion). Elimination only happens when the observed input
+    was empty, so each defaulted value must be the observed aggregate's
+    empty-input result (counts/sums → 0). Any other failure propagates."""
     try:
         return obs.get
-    except Exception:
+    except Py4JJavaError as e:
+        if (
+            "toPyRow" not in e.errmsg
+            or e.java_exception.getClass().getName() != "java.lang.AssertionError"
+        ):
+            raise
+        log.info(
+            "observation %s: observed subtree was eliminated as empty;"
+            " using defaults %s", obs._name, defaults,
+        )
         return defaults
 
 
@@ -635,43 +645,27 @@ def run_generation(
     t0 = time.time()
     frontier = store.read(spark, "frontier").select(*FRONTIER_COLS)
     seen = store.read(spark, "seen")
-    # Incrementally maintained bloom table: per-generation delta bitmaps,
-    # OR-merged at read (tiny — n_buckets rows per delta). This replaces
-    # the per-generation build_bloom(seen) rescan, whose cost is
-    # O(|seen|): at a 10^10-row seen set that rescan IS the job.
-    try:
-        bloom_deltas = store.read(spark, "bloom")
-    except FileNotFoundError:
-        bloom_deltas = None  # pre-bloom store (older run) — backfill below
-    bloom_df = (
-        merge_bloom(bloom_deltas) if (use_bloom and bloom_deltas is not None) else None
-    )
-    # exact_join='prebuilt': the exact seen side is ALSO an incrementally
-    # maintained delta log — sorted int64 shards per bucket, union-merged
-    # at read, appended per generation (cost ∝ new keys). A store without
-    # the table (branch-path history, or bootstrap) gets a one-time
-    # backfill over seen∪new at commit; this generation's filter then
-    # builds from the seen table directly (same one-time O(|seen|) cost
-    # the bloom backfill pays).
-    idx_deltas = None
+    # bloom and (exact_join='prebuilt') exact index: incrementally
+    # maintained delta logs, merged at read (see SeenIndexTable). When a
+    # table is missing, this generation's filter builds it from the seen
+    # table directly — the same one-time O(|seen|) cost its backfill pays.
+    bloom_tbl = SeenIndexTable(spark, store, "bloom")
+    bloom_df = bloom_tbl.merged() if use_bloom else None
+    idx_tbl = None
     exact_idx_df = None
     if exact_join == "prebuilt":
-        try:
-            idx_deltas = store.read(spark, "exact_index")
-        except FileNotFoundError:
-            idx_deltas = None
-        if idx_deltas is not None:
-            exact_idx_df = merge_exact_index(idx_deltas)
+        idx_tbl = SeenIndexTable(spark, store, "exact_index")
+        exact_idx_df = idx_tbl.merged()
 
     is_compact = bool(compact_every) and generation % compact_every == 0
     use_head = head_cache and bool(compact_every)
     head_cap = (compact_every + 1) * budget_per_host if use_head else 0
     head_df = None
     if use_head and not is_compact:
-        try:
-            head_df = store.read(spark, "head").select(*FRONTIER_COLS)
-        except FileNotFoundError:
-            head_df = None  # first generation / pre-head store → full rank
+        # None on the first generation / a pre-head store → full rank
+        head_df = store.read_or_none(spark, "head")
+        if head_df is not None:
+            head_df = head_df.select(*FRONTIER_COLS)
 
     if head_df is not None:
         # head generations never materialize the merge-on-read pending
@@ -928,14 +922,7 @@ def run_generation(
     delta = finished.select(*FRONTIER_COLS).unionByName(new_rows)
     if blocked is not None:
         delta = delta.unionByName(blocked)
-    # bloom delta: bitmaps over THIS generation's new keys only (cost ∝
-    # new rows). A pre-bloom store gets a one-time backfill over seen∪new.
-    new_keys = new_rows.select("url_hash")
-    if bloom_deltas is None:
-        bloom_delta = build_bloom(seen.select("url_hash").unionByName(new_keys))
-    else:
-        bloom_delta = build_bloom(new_keys)
-    if compact_every and generation % compact_every == 0:
+    if is_compact:
         merged = (
             frontier.filter(F.col("status") != "pending")
             .unionByName(finished.select(*FRONTIER_COLS))
@@ -947,26 +934,9 @@ def run_generation(
         if blocked is not None:
             merged = merged.unionByName(blocked)
         frontier_entry = ("frontier", merged, generation, "compact")
-        if bloom_deltas is not None:
-            bloom_delta = merge_bloom(bloom_deltas.unionByName(bloom_delta))
-        bloom_entry = ("bloom", bloom_delta, generation, "compact")
     else:
         frontier_entry = ("frontier", delta, generation, "append")
-        bloom_entry = ("bloom", bloom_delta, generation, "append")
-    idx_entry = None
-    if exact_join == "prebuilt":
-        if idx_deltas is None:
-            idx_delta = build_exact_index(
-                seen.select("url_hash").unionByName(new_keys)
-            )
-        else:
-            idx_delta = build_exact_index(new_keys)
-        if compact_every and generation % compact_every == 0:
-            if idx_deltas is not None:
-                idx_delta = merge_exact_index(idx_deltas.unionByName(idx_delta))
-            idx_entry = ("exact_index", idx_delta, generation, "compact")
-        else:
-            idx_entry = ("exact_index", idx_delta, generation, "append")
+    new_keys = new_rows.select("url_hash")
     # seen deltas follow the layout bootstrap chose (append dirs or the
     # bucketed external table — spec already pinned in the manifest)
     seen_mode = store.table_mode("seen") or "append"
@@ -981,10 +951,10 @@ def run_generation(
             seen_mode,
         ),
         ("metrics", metrics, generation, "append"),
-        bloom_entry,
+        bloom_tbl.entry(seen, new_keys, generation, is_compact),
     ]
-    if idx_entry is not None:
-        writes.append(idx_entry)
+    if idx_tbl is not None:
+        writes.append(idx_tbl.entry(seen, new_keys, generation, is_compact))
     if use_head:
         # head' = top-K·B per host of (this generation's unscheduled
         # input ∪ new discoveries). On a head generation the input was

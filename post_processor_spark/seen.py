@@ -15,14 +15,17 @@ Design:
   construction — host-hash bucketing would concentrate a mega-host's
   keys in one bucket, making its build task hot and its FPR balloon),
   built distributively (applyInPandas per bucket, numpy bit-ops — no
-  driver collection), carried as a tiny DataFrame (bucket, bitmap) and
-  broadcast-joined onto candidates. Candidates whose bloom says
-  "definitely unseen" skip the exact anti-join entirely; only
-  "maybe seen" rows (true positives + FPs) hit the exact join. At
-  10^10-frontier scale each executor holds only the buckets it joins
-  (~1.2 GB per 10^9 keys at 1% FPR, split across buckets); if the total
-  bloom outgrows broadcast, the same plan degrades gracefully to a
-  co-partitioned shuffle join on bucket — no code change.
+  driver collection of keys), carried as a tiny DataFrame (bucket,
+  bitmap) and collected once per pass into one flat broadcast bitmap.
+- two plans (filter_unseen's exact_join): 'prebuilt' resolves the bloom
+  AND the exact sorted-shard index in one narrow pandas UDF (no join
+  operator) while the index fits executor memory; 'branch' tags rows
+  with the bloom and sends only the "maybe seen" rows (true positives +
+  FPs) through a left_anti join — the plan for a seen side too big to
+  broadcast, and the only one that scans the bucketed seen layout in
+  place. Both plans broadcast the whole bitmap array (8 MB at the
+  default 64 x 1 Mbit geometry), so the bloom itself must fit executor
+  memory.
 """
 
 from __future__ import annotations
@@ -114,10 +117,8 @@ def build_exact_index(seen: DataFrame, n_buckets: int = 64) -> DataFrame:
     deltas, never rebuilt from the full seen table per pass. Membership
     is np.searchsorted — vectorized binary search, no per-pass serial
     hash-relation build (the Amdahl section that capped N→4N scaling of
-    the broadcast_fused pass). At 10^10 keys (80 GB) the index no longer
-    broadcasts — use the branch path + bucketed seen layout instead;
-    the bucket column means the same shards also serve a cogrouped
-    executor-side lookup without re-sharding."""
+    a broadcast anti-join). At 10^10 keys (80 GB) the index no longer
+    broadcasts — use the branch path + bucketed seen layout instead."""
 
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = np.unique(pdf["url_hash"].to_numpy(dtype=np.int64))
@@ -170,6 +171,50 @@ def merge_bloom(deltas: DataFrame) -> DataFrame:
     return deltas.groupBy("bucket").applyInPandas(or_reduce, schema=_BLOOM_SCHEMA)
 
 
+class SeenIndexTable:
+    """One seen-side delta table of a SnapshotStore — 'bloom' (bitmaps)
+    or 'exact_index' (sorted url_hash shards) — and the single rule that
+    maintains it.
+
+    Both are maintained INCREMENTALLY (north_rule 10^10 scale): each
+    commit appends a delta built from only its new keys (cost ∝ new
+    rows) and readers merge the deltas (tiny: n_buckets rows per delta),
+    so no generation rescans the full seen table — at a 10^10-row seen
+    set that rescan IS the job. A store without the table (bootstrap,
+    branch-path history, or a run from before the table existed) gets a
+    one-time backfill over seen ∪ new at its next write; compaction
+    folds every delta into one."""
+
+    def __init__(self, spark, store, table: str):
+        self.table = table
+        self.deltas = store.read_or_none(spark, table)
+
+    def _fns(self):
+        if self.table == "bloom":
+            return build_bloom, merge_bloom
+        return build_exact_index, merge_exact_index
+
+    def merged(self) -> DataFrame | None:
+        """The merged table, or None when the store has none yet."""
+        return None if self.deltas is None else self._fns()[1](self.deltas)
+
+    def entry(
+        self, seen: DataFrame, new_keys: DataFrame, generation: int,
+        compact: bool = False,
+    ) -> tuple:
+        """write_many entry adding `new_keys` (url_hash) to the table."""
+        build, merge = self._fns()
+        if self.deltas is None:
+            delta = build(seen.select("url_hash").unionByName(new_keys))
+        else:
+            delta = build(new_keys)
+        if not compact:
+            return (self.table, delta, generation, "append")
+        if self.deltas is not None:
+            delta = merge(self.deltas.unionByName(delta))
+        return (self.table, delta, generation, "compact")
+
+
 def _bucket_np(url_hash: np.ndarray, n_buckets: int) -> np.ndarray:
     """numpy twin of _bucket_col: uniform bucket from url_hash's high 32
     bits. Computing it INSIDE the pandas UDF from the hash it already
@@ -181,6 +226,37 @@ def _bucket_np(url_hash: np.ndarray, n_buckets: int) -> np.ndarray:
     )
 
 
+def _collect_bitmap(bloom: DataFrame, n_buckets: int, m: int) -> np.ndarray:
+    """Collect the (bucket, bitmap) frame into one flat (n_buckets * m/8)
+    byte array: the global bit address of position p in bucket b is
+    b * m + p, so the probe is a pure gather — no per-bucket Python
+    loop."""
+    bits_flat = np.zeros(n_buckets * (m // 8), dtype=np.uint8)
+    for r in bloom.collect():
+        b = int(r["bucket"])
+        bits_flat[b * (m // 8):(b + 1) * (m // 8)] = np.frombuffer(
+            r["bitmap"], dtype=np.uint8
+        )
+    return bits_flat
+
+
+def _might_contain(
+    bits_flat: np.ndarray, uh: np.ndarray, n_buckets: int, m: int, k: int
+) -> np.ndarray:
+    """Branch-free bloom test of int64 keys against a _collect_bitmap
+    array: True where all k bits are set (maybe seen), False where the
+    key is definitely unseen."""
+    base = _bucket_np(uh, n_buckets) * (m // 8)
+    pos = _positions(uh.view(np.uint64), k, m)
+    hit = np.ones(len(uh), dtype=bool)
+    for i in range(k):
+        p = pos[i]
+        hit &= (
+            bits_flat[base + (p >> 3)] & (np.uint8(1) << (p & 7).astype(np.uint8))
+        ) != 0
+    return hit
+
+
 def _unseen_udf(
     spark, bloom: DataFrame, exact_index: DataFrame, n_buckets: int,
     bits_per_bucket: int, k: int = 5,
@@ -190,19 +266,12 @@ def _unseen_udf(
     Arrow batch — the 'prebuilt' strategy's entire seen filter.
 
     Both lookup structures are flattened at collect time so the per-batch
-    test is branch-free vectorized numpy — no per-bucket Python loop:
-    the bitmaps concatenate into one (n_buckets * m/8) byte array
-    (global bit address = bucket * m + pos, a pure gather), and the
-    exact shards union-merge into ONE globally sorted key array (the
-    bucket partitioning exists for distributed build/maintenance and the
-    10^10 cogroup path, not for the broadcast probe)."""
+    test is vectorized numpy: the bitmaps via _collect_bitmap, and the
+    exact shards union-merged into ONE globally sorted key array (the
+    bucket partitioning exists for distributed build/maintenance, not
+    for the broadcast probe)."""
     m = bits_per_bucket
-    bits_flat = np.zeros(n_buckets * (m // 8), dtype=np.uint8)
-    for r in bloom.collect():
-        b = int(r["bucket"])
-        bits_flat[b * (m // 8):(b + 1) * (m // 8)] = np.frombuffer(
-            r["bitmap"], dtype=np.uint8
-        )
+    bits_flat = _collect_bitmap(bloom, n_buckets, m)
     shards = [
         np.frombuffer(r["keys"], dtype=np.int64) for r in exact_index.collect()
     ]
@@ -217,16 +286,7 @@ def _unseen_udf(
         if len(url_hash) == 0:
             return pd.Series(np.zeros(0, dtype=bool))
         uh = url_hash.to_numpy(dtype=np.int64)
-        bk = _bucket_np(uh, n_buckets)
-        bits = bc_b.value
-        base = bk * (m // 8)
-        pos = _positions(uh.view(np.uint64), k, m)
-        maybe = np.ones(len(uh), dtype=bool)
-        for i in range(k):
-            p = pos[i]
-            maybe &= (
-                bits[base + (p >> 3)] & (np.uint8(1) << (p & 7).astype(np.uint8))
-            ) != 0
+        maybe = _might_contain(bc_b.value, uh, n_buckets, m, k)
         seen_mask = np.zeros(len(uh), dtype=bool)
         if maybe.any():
             keys = bc_i.value
@@ -245,94 +305,34 @@ def bloom_filter_candidates(
     n_buckets: int = 64,
     bits_per_bucket: int = 1 << 20,
     k: int = 5,
-    mode: str = "auto",
 ) -> DataFrame:
-    """Tag candidates with maybe_seen. Two physical strategies — both keep
-    candidate ROWS out of Python (only the two hash longs ever cross the
-    Arrow channel; an earlier full-row cogroup variant was 20x slower):
-
-    - 'broadcast' (default while total bitmap bytes fit an executor):
-      bitmaps collected once + broadcast to workers; membership is a
-      scalar pandas UDF over (url_hash, bucket) — a narrow map, NO shuffle.
-    - 'cogroup' (the 10^10 path, bitmaps too big to broadcast): hash-only
-      projection cogrouped with its bucket's bitmap shard, then a JVM
-      join-back on url_hash. Each executor only ever holds the shards it
-      processes."""
+    """Tag candidates with maybe_seen. The bitmaps are collected once and
+    broadcast to workers; membership is a scalar pandas UDF over url_hash
+    — a narrow map, NO shuffle, and only the hash long crosses the Arrow
+    channel (candidate rows stay in the JVM)."""
     m = bits_per_bucket
-    bucket_col = _bucket_col(n_buckets)
+    bc = candidates.sparkSession.sparkContext.broadcast(
+        _collect_bitmap(bloom, n_buckets, m)
+    )
 
-    if mode == "auto":
-        mode = "broadcast" if n_buckets * (m // 8) <= 256 * (1 << 20) else "cogroup"
-
-    if mode == "broadcast":
-        spark = candidates.sparkSession
-        # flat concatenated bitmaps: branch-free vectorized probe (global
-        # bit address = bucket * m + pos), no per-bucket Python loop
-        bits_flat = np.zeros(n_buckets * (m // 8), dtype=np.uint8)
-        for r in bloom.collect():
-            b = int(r["bucket"])
-            bits_flat[b * (m // 8):(b + 1) * (m // 8)] = np.frombuffer(
-                r["bitmap"], dtype=np.uint8
-            )
-        bc = spark.sparkContext.broadcast(bits_flat)
-
-        @F.pandas_udf("boolean")
-        def might_contain(url_hash: pd.Series) -> pd.Series:
-            if len(url_hash) == 0:
-                return pd.Series(np.zeros(0, dtype=bool))
-            uh = url_hash.to_numpy(dtype=np.int64)
-            base = _bucket_np(uh, n_buckets) * (m // 8)
-            pos = _positions(uh.view(np.uint64), k, m)
-            bits = bc.value
-            hit = np.ones(len(uh), dtype=bool)
-            for i in range(k):
-                p = pos[i]
-                hit &= (
-                    bits[base + (p >> 3)]
-                    & (np.uint8(1) << (p & 7).astype(np.uint8))
-                ) != 0
-            return pd.Series(hit)
-
-        return candidates.withColumn(
-            "maybe_seen", might_contain(F.col("url_hash"))
+    @F.pandas_udf("boolean")
+    def might_contain(url_hash: pd.Series) -> pd.Series:
+        if len(url_hash) == 0:
+            return pd.Series(np.zeros(0, dtype=bool))
+        return pd.Series(
+            _might_contain(bc.value, url_hash.to_numpy(dtype=np.int64), n_buckets, m, k)
         )
 
-    # cogroup path: only (url_hash, bucket) enters Python
-    from pyspark.sql import types as T
+    return candidates.withColumn("maybe_seen", might_contain(F.col("url_hash")))
 
-    hashes = candidates.select(
-        F.col("url_hash"), bucket_col.alias("bucket")
-    ).dropDuplicates(["url_hash"])
 
-    out_schema = T.StructType(
-        [
-            T.StructField("url_hash", T.LongType()),
-            T.StructField("maybe_seen", T.BooleanType()),
-        ]
-    )
-
-    def check(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame({"url_hash": [], "maybe_seen": []})
-        if right.empty:
-            return pd.DataFrame(
-                {"url_hash": left["url_hash"], "maybe_seen": np.zeros(len(left), dtype=bool)}
-            )
-        bits = np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8)
-        uh = left["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-        pos = _positions(uh, k, m)
-        hit = np.ones(len(left), dtype=bool)
-        for i in range(k):
-            p = pos[i]
-            hit &= (bits[p >> 3] & (np.uint8(1) << (p & 7).astype(np.uint8))) != 0
-        return pd.DataFrame({"url_hash": left["url_hash"], "maybe_seen": hit})
-
-    tagged = (
-        hashes.groupby("bucket")
-        .cogroup(bloom.groupby("bucket"))
-        .applyInPandas(check, schema=out_schema)
-    )
-    return candidates.join(tagged, "url_hash", "left").fillna({"maybe_seen": False})
+def _finish(out: DataFrame, materialize: bool) -> DataFrame:
+    """filter_unseen's materialize contract: persist + force the result
+    and expose the forced row count as `out.materialized_count`."""
+    if materialize:
+        out = out.persist()
+        out.materialized_count = out.count()
+    return out
 
 
 def filter_unseen(
@@ -341,7 +341,6 @@ def filter_unseen(
     use_bloom: bool = True,
     n_buckets: int = 64,
     bits_per_bucket: int = 1 << 20,
-    mode: str = "auto",
     materialize: bool = False,
     bloom: DataFrame | None = None,
     exact_join: str = "branch",
@@ -349,8 +348,7 @@ def filter_unseen(
 ) -> DataFrame:
     """Rows of `candidates` whose url_hash is not in `seen`.
 
-    Bloom path: definitely-unseen rows bypass the exact join; maybe-seen
-    rows get the exact left_anti (resolves bloom false positives).
+    use_bloom=False: the plain left_anti join (the reference result).
 
     bloom: prebuilt (bucket, bitmap) frame (e.g. the incrementally
     maintained store table via merge_bloom). When omitted, the bloom is
@@ -358,35 +356,21 @@ def filter_unseen(
     one-shot use, NOT per generation at scale.
 
     exact_join='branch' (default): two-branch union — definitely-unseen
-    rows bypass the exact join as a separate plan branch. Correct under
-    ANY join strategy, including the bucketed storage-partitioned seen
-    layout; costs one cache of the tagged frame (both branches consume
-    it).
-    exact_join='broadcast_fused': ONE streaming pass, no intermediate
-    cache — the anti-join key is NULLed for definitely-unseen rows (a
-    null key never matches a left_anti probe, so those rows survive
-    without touching the hash table) and the seen side is explicitly
-    broadcast. ONLY valid while the seen side fits a broadcast: under a
-    shuffle join every null-key row would hash to a single partition —
-    the worst possible skew — and the expression key would defeat the
-    bucketed layout's exchange-free scan. Used by the seed-list fast
-    path (frontier.schedule_seed_list).
+    rows bypass the exact join as a separate plan branch; maybe-seen
+    rows get the exact left_anti (resolves bloom false positives).
+    Correct under ANY join strategy, including the bucketed
+    storage-partitioned seen layout; costs one cache of the tagged frame
+    (both branches consume it).
     exact_join='prebuilt': bloom test AND exact resolution in ONE narrow
     pandas UDF — the exact side is the incrementally-maintained sorted
-    int64 shard index (build_exact_index / merge_exact_index), broadcast
-    as compact numpy arrays; membership is vectorized np.searchsorted on
-    the bloom-maybe subset only. NO join operator and NO per-pass serial
-    hash-relation build — the whole seen filter is a narrow map, so the
-    pass's only non-parallel cost is the bitmap+index collect/broadcast
-    (~40 MB at a 4M-key seen side). Valid while the index fits executor
-    memory (same envelope as broadcast_fused); at 10^10 keys use the
-    branch path + bucketed layout.
-    exact_join='shuffle_hash': the branch plan with a shuffle-hash hint
-    on the seen side of the maybe-resolve join — no serial broadcast
-    relation build (the broadcast build is a fixed Amdahl section that
-    caps scaling efficiency as core count grows); both sides exchange
-    and hash in parallel instead. Pick this when the seen side is large
-    enough that its broadcast build rivals the per-core pass time.
+    int64 shard index (build_exact_index / merge_exact_index; built from
+    `seen` when exact_index is omitted), broadcast as compact numpy
+    arrays; membership is vectorized np.searchsorted on the bloom-maybe
+    subset only. NO join operator and NO per-pass serial hash-relation
+    build — the whole seen filter is a narrow map, so the pass's only
+    non-parallel cost is the bitmap+index collect/broadcast (~40 MB at a
+    4M-key seen side). Valid while the index fits executor memory; at
+    10^10 keys use the branch path + bucketed layout.
 
     materialize=True: persist + force the RESULT, then release the
     intermediate cache. Use when the caller consumes the result more than
@@ -397,17 +381,15 @@ def filter_unseen(
     # NOTE: no .distinct() on the seen side — left_anti semantics ignore
     # duplicate matches, and a distinct would shuffle the full seen table
     # (10^10 rows at target scale) before every generation's join.
-    if exact_join not in ("branch", "broadcast_fused", "shuffle_hash", "prebuilt"):
+    if exact_join not in ("branch", "prebuilt"):
         raise ValueError(
-            "exact_join must be 'branch', 'broadcast_fused', 'shuffle_hash'"
-            f" or 'prebuilt', got {exact_join!r}"
+            f"exact_join must be 'branch' or 'prebuilt', got {exact_join!r}"
         )
     if not use_bloom:
-        out = candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
-        if materialize:
-            out = out.persist()
-            out.materialized_count = out.count()
-        return out
+        return _finish(
+            candidates.join(seen.select("url_hash"), "url_hash", "left_anti"),
+            materialize,
+        )
     if bloom is None:
         # Ad-hoc one-shot build (callers on the per-generation path pass
         # the incrementally-maintained store bloom instead): right-size
@@ -423,50 +405,25 @@ def filter_unseen(
     if exact_join == "prebuilt":
         if exact_index is None:
             exact_index = build_exact_index(seen, n_buckets)
-        out = candidates.filter(
-            _unseen_udf(
-                candidates.sparkSession, bloom, exact_index, n_buckets,
-                bits_per_bucket,
-            )(F.col("url_hash"))
+        return _finish(
+            candidates.filter(
+                _unseen_udf(
+                    candidates.sparkSession, bloom, exact_index, n_buckets,
+                    bits_per_bucket,
+                )(F.col("url_hash"))
+            ),
+            materialize,
         )
-        if materialize:
-            out = out.persist()
-            out.materialized_count = out.count()
-        return out
-    if exact_join == "broadcast_fused":
-        tagged = bloom_filter_candidates(
-            candidates, bloom, n_buckets, bits_per_bucket, mode=mode
-        )
-        out = (
-            tagged.withColumn(
-                "_mk", F.when(F.col("maybe_seen"), F.col("url_hash"))
-            )
-            .join(
-                F.broadcast(seen.select(F.col("url_hash").alias("_mk"))),
-                "_mk",
-                "left_anti",
-            )
-            .drop("_mk", "maybe_seen")
-        )
-        if materialize:
-            out = out.persist()
-            out.materialized_count = out.count()
-        return out
     # persist: both branches (definitely-unseen ∪ resolved-maybe) consume
     # `tagged`; without a cache each union branch re-runs the candidate
     # lineage AND the bloom check
     tagged = bloom_filter_candidates(
-        candidates, bloom, n_buckets, bits_per_bucket, mode=mode
+        candidates, bloom, n_buckets, bits_per_bucket
     ).persist()
     definitely_unseen = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    seen_side = seen.select("url_hash")
-    if exact_join == "shuffle_hash":
-        seen_side = seen_side.hint("shuffle_hash")
-    resolved = maybe.join(seen_side, "url_hash", "left_anti")
-    out = definitely_unseen.unionByName(resolved)
+    resolved = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")
+    out = _finish(definitely_unseen.unionByName(resolved), materialize)
     if materialize:
-        out = out.persist()
-        out.materialized_count = out.count()
         tagged.unpersist()
     return out

@@ -214,13 +214,16 @@ class SnapshotStore:
         instead of their sum. For the generation loop — whose deltas are
         small and whose commit is dominated by per-job scheduling
         latency, not I/O — this is the difference between 5-6 serialized
-        job latencies per generation and one. Manifest bookkeeping stays
-        sequential on the driver; any write failure aborts before the
-        manifest commit, so the crash contract is unchanged."""
+        job latencies per generation and one. Bucketed appends write into
+        the live table, so they run only after every directory write has
+        succeeded. Manifest bookkeeping stays sequential on the driver; any
+        write failure aborts before the manifest commit, so the crash
+        contract is unchanged."""
         from concurrent.futures import ThreadPoolExecutor
 
         manifest = self._read_manifest()
         jobs: list = []
+        appends: list = []
         for table, df, generation, mode in writes:
             table_mode = "append" if mode == "compact" else mode
             t = manifest["tables"].setdefault(
@@ -235,16 +238,18 @@ class SnapshotStore:
             if mode == "bucketed":
                 # Append into the ONE bucketed external table; visibility is
                 # gated by `gen_col <= current` at read, not by dir refs.
-                # Crash contract: rows appended by a failed commit become
-                # visible once a LATER commit records generation >= g — so
-                # bucketed mode is ONLY for idempotent membership tables
+                # Crash contract: rows appended by a commit that fails at
+                # or after its bucketed appends (which run last, once every
+                # dir write succeeded) become visible once a LATER commit
+                # records generation >= g — so bucketed mode is ONLY for
+                # idempotent membership tables
                 # (duplicate seen rows are inert: left_anti ignores them,
                 # bloom bits OR idempotently). Appends never rewrite files,
                 # so lazy readers stay valid (their file listing is frozen
                 # at plan time).
                 spec = self._bucketed_spec(t, table, df, bucket_specs)
                 self._ensure_bucketed_registered(df.sparkSession, spec)
-                jobs.append(
+                appends.append(
                     lambda df=df, spec=spec: (
                         df.write.format("parquet")
                         .bucketBy(spec["n"], *spec["cols"])
@@ -283,6 +288,8 @@ class SnapshotStore:
                 futures = [pool.submit(j) for j in jobs]
                 for f in futures:
                     f.result()  # re-raise the first failure BEFORE commit
+        for append in appends:
+            append()
         self._commit_manifest(manifest)
 
     def read(
@@ -312,6 +319,15 @@ class SnapshotStore:
         else:
             paths = t["dirs"][str(gen)]
         return spark.read.parquet(*paths)
+
+    def read_or_none(self, spark: SparkSession, table: str) -> DataFrame | None:
+        """read() of the current version, or None when the table has no
+        snapshot yet (a fresh store, or one from before the table
+        existed)."""
+        try:
+            return self.read(spark, table)
+        except FileNotFoundError:
+            return None
 
     def table_mode(self, table: str) -> str | None:
         t = self._read_manifest()["tables"].get(table)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import frontier
+from .seen import SeenIndexTable
 from .state import SnapshotStore
 
 SEED_SCHEMA = "url string, priority int, seq long"
@@ -57,13 +58,14 @@ def start_frontier_stream(
             unseen_new = new_rows.join(
                 seen.select("url_hash"), "url_hash", "left_anti"
             ).persist()
-            # frontier + seen + bloom are delta logs: merging a seed batch
-            # is one atomic append of the genuinely-new rows, not a
-            # rewrite. The bloom delta keeps the incremental bitmap table
-            # consistent with seen — a missing delta would let these keys
-            # pass the bloom as definitely-unseen later.
-            from .seen import build_bloom
-
+            # frontier + seen + bloom (+ exact index) are delta logs:
+            # merging a seed batch is one atomic append of the
+            # genuinely-new rows, not a rewrite. The seen-side index
+            # deltas keep those tables consistent with seen — a missing
+            # bloom delta would let these keys pass as definitely-unseen
+            # later, a missing exact-index delta would let them pass the
+            # 'prebuilt' probe as unseen and be re-admitted.
+            new_keys = unseen_new.select("url_hash")
             writes = [
                 ("frontier", unseen_new.select(*frontier.FRONTIER_COLS), gen_now, "append"),
                 (
@@ -75,22 +77,29 @@ def start_frontier_stream(
                     # follow the layout bootstrap pinned in the manifest
                     store.table_mode("seen") or "append",
                 ),
-                ("bloom", build_bloom(unseen_new.select("url_hash")), gen_now, "append"),
+                SeenIndexTable(spark, store, "bloom").entry(seen, new_keys, gen_now),
             ]
+            # the exact index exists once a 'prebuilt' generation built it;
+            # until then that generation backfills it over the whole seen set
+            idx = SeenIndexTable(spark, store, "exact_index")
+            if idx.deltas is not None:
+                writes.append(idx.entry(seen, new_keys, gen_now))
             # merge the new seeds into the scheduler head cache too — the
             # head must see every pending row that could make a host's
-            # top-B before the next full refill
-            try:
-                head = store.read(spark, "head").select(*frontier.FRONTIER_COLS)
+            # top-B before the next full refill (no head yet: the next
+            # generation builds it from pending)
+            head = store.read_or_none(spark, "head")
+            if head is not None:
                 cap = (sched_kwargs.get("compact_every", 8) + 1) * sched_kwargs.get(
                     "budget_per_host", 8
                 )
                 merged = frontier.top_per_host(
-                    head.unionByName(unseen_new.select(*frontier.FRONTIER_COLS)), cap
+                    head.select(*frontier.FRONTIER_COLS).unionByName(
+                        unseen_new.select(*frontier.FRONTIER_COLS)
+                    ),
+                    cap,
                 )
                 writes.append(("head", merged, gen_now, "snapshot"))
-            except FileNotFoundError:
-                pass  # no head yet — next generation builds it from pending
             store.write_many(writes)
             unseen_new.unpersist()
         frontier.run_generation(spark, store, documents, gen_now + 1, **sched_kwargs)
@@ -266,11 +275,11 @@ def start_host_cardinality_stream(
         delta = sketches.hll_sketch_table(batch, ["host_hash"], "url_hash", lgk)
         cur = store.current_generation("host_hll")
         gen = (cur if cur is not None else 0) + 1
-        try:
-            prev = store.read(spark, "host_hll")
-            merged = sketches.merge_hll_tables(prev, delta, ["host_hash"])
-        except FileNotFoundError:
-            merged = delta
+        prev = store.read_or_none(spark, "host_hll")
+        merged = (
+            delta if prev is None
+            else sketches.merge_hll_tables(prev, delta, ["host_hash"])
+        )
         store.write("host_hll", merged, gen)
 
     return (

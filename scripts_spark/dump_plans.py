@@ -106,8 +106,8 @@ def main() -> None:
 
     # fused seed scheduling (frontier.schedule_seed_list): the seed
     # payload must cross exactly ONE exchange — the dedupe window fuses
-    # into the politeness host exchange, the exact seen anti-join is a
-    # null-keyed broadcast, and no standalone dedupe (SortAggregate /
+    # into the politeness host exchange, the seen filter is the narrow
+    # 'prebuilt' pandas UDF, and no standalone dedupe (SortAggregate /
     # url_hash hashpartitioning) appears anywhere.
     from post_processor_spark import fixtures, frontier
 

@@ -3,7 +3,8 @@
 Times, in one warm JVM at a given core count:
   (a) bloom collect+broadcast alone (8 MB bitmaps)
   (b) exact-side broadcast relation build alone (seen keys -> noop join)
-  (c) the full fused pass (schedule_seed_list, broadcast_fused)
+  (c) the full fused pass (schedule_seed_list, prebuilt, with the exact
+      index built outside the timed region like the bloom)
   (d) the branch pass: bloom tag + shuffle-hash exact anti-join on the
       maybe-seen subset (no serial broadcast build)
 
@@ -45,6 +46,8 @@ def main() -> None:
     )
     bloom_df = seen_mod.build_bloom(seen_tbl).persist()
     bloom_df.count()
+    idx_df = seen_mod.build_exact_index(seen_tbl).persist()
+    idx_df.count()
     n_seen = seen_tbl.count()
 
     out = {"cores": cores, "n_urls": n_urls, "n_seen": n_seen}
@@ -76,6 +79,7 @@ def main() -> None:
         # too (persist marks survive, entries don't) — re-force so the
         # timed region never rebuilds state lineage
         bloom_df.count()
+        idx_df.count()
         seen_tbl.count()
 
     # warm-up full pass at small n (codegen, python workers)
@@ -84,7 +88,8 @@ def main() -> None:
     for rep in range(2):
         reforce()
         rate, n_sched = _fused_pass(spark, n_urls, n_hosts=n_hosts,
-                                    seen_tbl=seen_tbl, bloom_df=bloom_df)
+                                    seen_tbl=seen_tbl, bloom_df=bloom_df,
+                                    idx_df=idx_df)
         out[f"c_fused_rate_rep{rep}"] = round(rate)
     out["n_scheduled"] = n_sched
 
@@ -99,7 +104,7 @@ def main() -> None:
     spark.stop()
 
 
-def _fused_pass(spark, n_urls, n_hosts, seen_tbl=None, bloom_df=None):
+def _fused_pass(spark, n_urls, n_hosts, seen_tbl=None, bloom_df=None, idx_df=None):
     seeds = fixtures.synthetic_seed_frontier(
         spark, n_urls, n_hosts=n_hosts, mega_host_share=0.3, seed=99)
     if seen_tbl is None:
@@ -111,7 +116,7 @@ def _fused_pass(spark, n_urls, n_hosts, seen_tbl=None, bloom_df=None):
     t0 = time.time()
     sched = frontier.schedule_seed_list(
         seeds, seen_tbl, generation=1, budget_per_host=64, salt_parts=64,
-        bloom=bloom_df,
+        bloom=bloom_df, exact_index=idx_df,
     ).filter(F.col("status") == "scheduled")
     n = sched.count()
     dt = time.time() - t0

@@ -73,16 +73,10 @@ PER_CORE_GB = 4
 # state, maintained incrementally by the generation loop; the pass
 # still pays the bitmap collect+broadcast and exact-side broadcast).
 # v4 = exact seen side carried as the incrementally-maintained
-# sorted-shard index (seen.build_exact_index, BENCH_EXACT_JOIN=prebuilt,
-# the bench default): same input -> same scheduled set as v3, but the
-# pass pays the index collect+broadcast instead of a per-pass broadcast
-# hash-relation build. Join-strategy rounds (BENCH_EXACT_JOIN set to a
-# join mode) keep the v3 tag for comparability with the v3 history.
-WORKLOAD = (
-    "v4"
-    if os.environ.get("BENCH_EXACT_JOIN", "prebuilt") == "prebuilt"
-    else "v3"
-)
+# sorted-shard index (seen.build_exact_index): same input -> same
+# scheduled set as v3, but the pass pays the index collect+broadcast
+# instead of a per-pass broadcast hash-relation build.
+WORKLOAD = "v4"
 
 RUNNER = r"""
 import json, sys, time

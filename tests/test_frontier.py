@@ -80,7 +80,7 @@ def test_merge_exact_index_unions_deltas(spark):
 def test_schedule_seed_list_prebuilt_matches_branch(spark):
     """schedule_seed_list output is strategy-invariant: the prebuilt
     narrow-UDF seen filter must schedule the identical set (url_hash,
-    status, not_before) as the branch-path join strategies."""
+    status, not_before) as the branch-path bloom tag + anti-join."""
     seeds = fixtures.synthetic_seed_frontier(spark, 4000, n_hosts=30, seed=11)
     seen_tbl = frontier.canonicalize_candidates(
         fixtures.synthetic_seed_frontier(spark, 4000, n_hosts=30, seed=11)
@@ -90,7 +90,7 @@ def test_schedule_seed_list_prebuilt_matches_branch(spark):
         "url_hash", "host_hash", F.lit(0).alias("generation")
     ).persist()
     outs = {}
-    for strat in ("broadcast_fused", "prebuilt"):
+    for strat in ("branch", "prebuilt"):
         out = frontier.schedule_seed_list(
             seeds, seen_tbl, generation=1, budget_per_host=4, salt_parts=4,
             exact_join=strat,
@@ -100,8 +100,18 @@ def test_schedule_seed_list_prebuilt_matches_branch(spark):
             for r in out.select("url_hash", "status", "not_before").collect()
         )
         spark.catalog.clearCache()
-    assert outs["broadcast_fused"] == outs["prebuilt"]
+    assert outs["branch"] == outs["prebuilt"]
     seen_tbl.unpersist()
+
+
+@pytest.mark.parametrize("strat", ["broadcast_fused", "shuffle_hash", "no_such_plan"])
+def test_filter_unseen_rejects_unknown_exact_join(spark, strat):
+    """Only the 'branch' and 'prebuilt' plans exist; any other name —
+    including the removed strategies — fails loudly instead of silently
+    running a default plan."""
+    cands = spark.range(3).select(F.col("id").alias("url_hash"))
+    with pytest.raises(ValueError, match="exact_join"):
+        seen_mod.filter_unseen(cands, cands, exact_join=strat)
 
 
 def test_merge_bloom_or_reduces_deltas(spark):
@@ -249,10 +259,11 @@ def test_politeness_slim_exchange_roundtrip(spark):
 
 
 def test_fused_schedule_matches_standalone(spark):
-    """schedule_seed_list (one-exchange fused dedupe+politeness +
-    null-key broadcast seen join) must reproduce the standalone pipeline
-    (seeds_to_frontier dedupe → filter_unseen branch path → politeness)
-    row-for-row on a duplicate-heavy, mega-host-skewed seed list — the
+    """schedule_seed_list (one-exchange fused dedupe+politeness + the
+    default 'prebuilt' narrow seen filter) must reproduce the standalone
+    pipeline (seeds_to_frontier dedupe → filter_unseen branch path →
+    politeness) row-for-row on a duplicate-heavy, mega-host-skewed seed
+    list — the
     skew_threshold is forced low so the salted branch's fused dedupe is
     exercised too."""
     from post_processor_spark import seen as seen_mod
@@ -838,7 +849,11 @@ def test_generation_job_count_constant_in_g(spark):
     an earlier one at the same loop position — an O(G) term in the loop
     (per-delta jobs, per-generation collects) would grow it."""
     def job_count():
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+        # the status store keeps only the newest spark.ui.retainedJobs
+        # jobs, so after earlier tests it evicts entries mid-test; job ids
+        # are sequential, so the newest id (listed first) counts every job
+        jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+        return jobs.head().jobId() if jobs.nonEmpty() else -1
 
     docs = fixtures.synthetic_documents(spark, 800, n_hosts=40, seed=13).persist()
     seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(80)

@@ -148,6 +148,40 @@ def test_streaming_frontier(spark, tmp_path):
     assert fr.filter("status = 'done'").count() > 0
 
 
+def test_streaming_seed_merge_maintains_exact_index(spark, tmp_path):
+    """On a 'prebuilt' store the seed merge must append an exact_index
+    delta beside its seen delta: a merged seed missing from the index
+    passes the bloom as 'maybe', misses the searchsorted probe, and is
+    re-admitted as new by a later generation."""
+    from post_processor_spark import fixtures, streaming
+    from post_processor_spark.seen import build_exact_index, merge_exact_index
+    from post_processor_spark.state import SnapshotStore
+
+    docs = fixtures.synthetic_documents(spark, 100, n_hosts=10, seed=5)
+    seed_dir = tmp_path / "seeds"
+    seed_dir.mkdir()
+    store = SnapshotStore(str(tmp_path / "store"))
+    # batch 0 bootstraps; batch 1 (URLs no document links to) takes the
+    # seed-merge path
+    for b, path in enumerate(["doc", "fresh"]):
+        rows = [
+            {"url": f"https://host{i % 10}.example.com/{path}/{i}", "priority": 1, "seq": i}
+            for i in range(20 * b, 20 * b + 20)
+        ]
+        (seed_dir / f"batch{b}.json").write_text("\n".join(json.dumps(r) for r in rows))
+        q = streaming.start_frontier_stream(
+            spark, store, docs, str(seed_dir), str(tmp_path / "ckpt"),
+            budget_per_host=4, exact_join="prebuilt",
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+    index = merge_exact_index(store.read(spark, "exact_index")).collect()
+    want = build_exact_index(store.read(spark, "seen")).collect()
+    assert {r["bucket"]: r["keys"] for r in index} == {
+        r["bucket"]: r["keys"] for r in want
+    }
+
+
 def test_metrics_window_groups_by_generation_epoch(spark):
     from post_processor_spark import streaming
 

@@ -136,6 +136,34 @@ def test_write_many_concurrent_failure_leaves_manifest_intact(spark):
             s.read(spark, "c")
 
 
+def test_write_many_failure_leaves_no_bucketed_rows(spark):
+    """A bucketed append writes into the live table (there is no dir for
+    the manifest to leave unreferenced), so it must run only after every
+    directory write has succeeded: a failing sibling leaves the bucketed
+    table's rows untouched, and they stay absent once a later commit at a
+    higher generation widens visibility past the failed generation."""
+    from pyspark.sql import functions as F
+
+    with tempfile.TemporaryDirectory() as d:
+        s = SnapshotStore(d)
+        s.write_bucketed("seen", _seen_df(spark, 0, 100, 0), 0, n_buckets=4)
+        name = s._read_manifest()["tables"]["seen"]["bucketed"]["name"]
+        boom = _df(spark, [1]).select(
+            F.assert_true(F.col("v") > 99).alias("v")  # fails per-row at runtime
+        )
+        with pytest.raises(Exception):
+            s.write_many(
+                [
+                    ("seen", _seen_df(spark, 100, 150, 1), 1, "bucketed"),
+                    ("c", boom, 1, "snapshot"),
+                ]
+            )
+        assert spark.table(name).count() == 100
+        s.write_bucketed("seen", _seen_df(spark, 150, 160, 2), 2)
+        assert s.read(spark, "seen").count() == 110
+        assert s.read(spark, "seen").filter("generation = 1").count() == 0
+
+
 def test_write_many_commits_together(spark):
     with tempfile.TemporaryDirectory() as d:
         s = SnapshotStore(d)
