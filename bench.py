@@ -284,7 +284,7 @@ def main() -> None:
 
     # Heap scales with cores, same rule as the scaling bench (4 GB/core,
     # capped to leave the 128 GiB box headroom): the 32-thread frontier
-    # pass at the session default 48g spends most of its time in
+    # pass at a 48g heap spends most of its time in
     # spill-driven sort re-reads — measured 70.9k URLs/s at 48g vs
     # 201.1k at 96g on the identical 20M-seed input. A real cluster
     # brings memory WITH executors, so per-core sizing is the honest

@@ -94,8 +94,16 @@ def decode_bmp(data: bytes) -> np.ndarray:
     channel order."""
     if data[:2] != b"BM":
         raise ValueError("not a BMP payload")
+    if len(data) < 54:
+        raise ValueError(f"truncated BMP: {len(data)} bytes, headers need 54")
     (pix_off,) = struct.unpack_from("<I", data, 10)
     (hdr_size,) = struct.unpack_from("<I", data, 14)
+    if hdr_size < 40:
+        # BITMAPCOREHEADER (12 bytes) packs 16-bit dims at other offsets
+        raise NotImplementedError(
+            f"BMP info header of {hdr_size} bytes not supported; "
+            "only BITMAPINFOHEADER (40+ bytes)"
+        )
     w, h = struct.unpack_from("<ii", data, 18)
     (bpp,) = struct.unpack_from("<H", data, 28)
     (comp,) = struct.unpack_from("<I", data, 30)
@@ -106,6 +114,11 @@ def decode_bmp(data: bytes) -> np.ndarray:
         )
     bottom_up, h = h > 0, abs(h)
     row_bytes = ((bpp * w + 31) // 32) * 4
+    if w < 0 or pix_off < 14 + hdr_size or len(data) < pix_off + row_bytes * h:
+        raise ValueError(
+            f"truncated or malformed BMP: {len(data)} bytes for a {w}x{h} "
+            f"{bpp}-bpp raster at offset {pix_off}"
+        )
     raster = np.frombuffer(
         data, dtype=np.uint8, count=row_bytes * h, offset=pix_off
     ).reshape(h, row_bytes)

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import canon
-from .seen import SeenIndexTable, build_bloom, filter_unseen
+from .seen import SeenSide, build_bloom, filter_unseen
 from .state import SnapshotStore
 
 log = logging.getLogger(__name__)
@@ -182,6 +182,27 @@ def _dedupe_candidates_slim(df: DataFrame) -> DataFrame:
     )
 
 
+def _skew_split(
+    df: DataFrame, cap: int, salt_parts: int, skew_threshold: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """(norm, big): rows of hosts with at most / more than skew_threshold
+    rows (default max(cap·S, 4096)), from one cheap hash-agg census. The
+    big branch is the one worth a salted pre-rank: it caps any single sort
+    partition at ~threshold rows."""
+    if skew_threshold is None:
+        skew_threshold = max(cap * salt_parts, 4096)
+    big_hosts = F.broadcast(
+        df.groupBy("host_hash")
+        .count()
+        .filter(F.col("count") > skew_threshold)
+        .select("host_hash")
+    )
+    return (
+        df.join(big_hosts, "host_hash", "left_anti"),
+        df.join(big_hosts, "host_hash", "left_semi"),
+    )
+
+
 def politeness_schedule(
     pending: DataFrame,
     generation: int,
@@ -224,8 +245,6 @@ def politeness_schedule(
     synthesized in the output either way.
 
     Returns the full frame with updated status/not_before/sched_gen."""
-    if skew_threshold is None:
-        skew_threshold = max(budget_per_host * salt_parts, 4096)
     has_status = "status" in pending.columns
 
     # Slim exchange: url/host ride as NULL whenever recoverable from
@@ -240,15 +259,7 @@ def politeness_schedule(
     # pack (priority, generation) into one rank long for the sort +
     # exchange; unpacked after the windows (exact — see _pack_order)
     pending = _pack_order(pending)
-
-    big_hosts = (
-        pending.groupBy("host_hash")
-        .count()
-        .filter(F.col("count") > skew_threshold)
-        .select("host_hash")
-    )
-    norm = pending.join(F.broadcast(big_hosts), "host_hash", "left_anti")
-    big = pending.join(F.broadcast(big_hosts), "host_hash", "left_semi")
+    norm, big = _skew_split(pending, budget_per_host, salt_parts, skew_threshold)
 
     w_host = Window.partitionBy("host_hash").orderBy(*_PACKED_ORDER)
     salt = F.pmod(F.col("url_hash"), F.lit(salt_parts))
@@ -354,17 +365,7 @@ def top_per_host(
     same two-phase salted pattern as politeness_schedule: shard pre-rank
     caps any single sort partition, global rank finalizes ≤cap*S rows).
     Used to maintain the scheduler head cache."""
-    if skew_threshold is None:
-        skew_threshold = max(cap * salt_parts, 4096)
-    df = _pack_order(df)
-    big_hosts = (
-        df.groupBy("host_hash")
-        .count()
-        .filter(F.col("count") > skew_threshold)
-        .select("host_hash")
-    )
-    norm = df.join(F.broadcast(big_hosts), "host_hash", "left_anti")
-    big = df.join(F.broadcast(big_hosts), "host_hash", "left_semi")
+    norm, big = _skew_split(_pack_order(df), cap, salt_parts, skew_threshold)
     salt = F.pmod(F.col("url_hash"), F.lit(salt_parts))
     w_shard = Window.partitionBy("host_hash", salt).orderBy(*_PACKED_ORDER)
     survivors = (
@@ -569,22 +570,41 @@ def _observed(obs: Observation, defaults: dict) -> dict:
         return defaults
 
 
-def pending_view(
-    spark: SparkSession, store: SnapshotStore, generation: int | None = None
-) -> DataFrame:
-    """Merge-on-read pending state of the append-mode frontier table.
+def _pending(fr: DataFrame) -> DataFrame:
+    """Merge-on-read pending rows of a frontier delta log.
 
-    The frontier is a delta log: discovery writes a url's row once with
-    status='pending' (the seen-filter guarantees at-most-once discovery)
-    and scheduling writes it once more with status='done'. Latest-wins
-    therefore reduces to an anti-join against the done keys — no window,
-    no full-table rewrite per generation (the O(frontier) write the
-    snapshot design paid; at 10^10 pending rows that write IS the job)."""
-    fr = store.read(spark, "frontier", generation).select(*FRONTIER_COLS)
+    Discovery writes a url's row once with status='pending' (the
+    seen-filter guarantees at-most-once discovery) and scheduling writes
+    it once more with status='done' (or robots, 'blocked'). Latest-wins
+    therefore reduces to an anti-join against the non-pending keys — no
+    window, no full-table rewrite per generation (the O(frontier) write
+    the snapshot design paid; at 10^10 pending rows that write IS the
+    job)."""
     done_keys = fr.filter(F.col("status") != "pending").select("url_hash")
     return fr.filter(F.col("status") == "pending").join(
         done_keys, "url_hash", "left_anti"
     )
+
+
+def pending_view(
+    spark: SparkSession, store: SnapshotStore, generation: int | None = None
+) -> DataFrame:
+    """Merge-on-read pending state of the append-mode frontier table."""
+    return _pending(store.read(spark, "frontier", generation).select(*FRONTIER_COLS))
+
+
+# run_generation's defaults for the two options that size the head cache
+BUDGET_PER_HOST = 8
+COMPACT_EVERY = 8
+
+
+def head_cap(
+    budget_per_host: int = BUDGET_PER_HOST, compact_every: int = COMPACT_EVERY, **_
+) -> int:
+    """Rows per host the scheduler head cache keeps: K·B with
+    K = compact_every + 1 (see run_generation). Accepts run_generation's
+    keyword options as given to it; the others are ignored."""
+    return (compact_every + 1) * budget_per_host
 
 
 def run_generation(
@@ -592,19 +612,20 @@ def run_generation(
     store: SnapshotStore,
     documents: DataFrame,
     generation: int,
-    budget_per_host: int = 8,
+    budget_per_host: int = BUDGET_PER_HOST,
     crawl_delay_sec: int = 1,
     salt_parts: int = 16,
     use_bloom: bool = True,
-    compact_every: int = 8,
+    compact_every: int = COMPACT_EVERY,
     robots: DataFrame | None = None,
-    head_cache: bool = True,
     exact_join: str = "branch",
     trap_gate: bool = False,
 ) -> dict:
     """One frontier generation: robots gate → schedule → fetch(sim) →
     expand → dedupe → seen-filter → delta commit. Returns driver-side
-    metrics dict.
+    metrics: rows_in, scheduled, discovered, new, blocked, wall_ms (up to
+    the commit — the value the metrics row carries, since a row cannot
+    contain its own commit) and commit_ms (the write_many commit).
 
     trap_gate: apply canon.is_crawl_trap as an admission filter on
     discovered outlinks, BEFORE the in-batch dedupe and the seen
@@ -625,10 +646,12 @@ def run_generation(
     The frontier commit is a DELTA (finished + newly discovered rows),
     cost ∝ scheduled+new instead of O(frontier); every `compact_every`
     generations the merged state is compacted into one dir so the
-    read-side delta union and done-key anti-join stay bounded.
+    read-side delta union and done-key anti-join stay bounded. Newly
+    admitted URLs reach the seen side through seen.SeenSide.admit.
 
-    head_cache: schedule from a generation-carried HEAD table — per host
-    the top K·B pending rows in crawl order, K = compact_every+1 — so a
+    Head cache, active whenever compact_every > 0: schedule from a
+    generation-carried HEAD table — per host the top head_cap = K·B
+    pending rows in crawl order, K = compact_every+1 — so a
     non-compaction generation ranks only O(head + new) rows instead of
     the full pending set (at a 10^10-row frontier, ranking all pending
     to schedule ~B·hosts rows is the scale-killer). EXACTNESS: a row
@@ -638,50 +661,41 @@ def run_generation(
     next full refill — and newly discovered rows always merge through
     the head, so the head's top-B equals the full-pending top-B every
     generation. The refill rides the compaction pass (which already
-    scans the full delta log). Disabled when compact_every=0. With the
-    head active, the rows_in metric counts the scheduler's input rows
-    (head size), not the full pending set — counting 10^10 pending rows
-    per generation would defeat the point."""
+    scans the full delta log). compact_every=0 ranks the full pending
+    view every generation. With the head active, the rows_in metric
+    counts the scheduler's input rows (head size), not the full pending
+    set — counting 10^10 pending rows per generation would defeat the
+    point."""
     t0 = time.time()
     frontier = store.read(spark, "frontier").select(*FRONTIER_COLS)
-    seen = store.read(spark, "seen")
-    # bloom and (exact_join='prebuilt') exact index: incrementally
-    # maintained delta logs, merged at read (see SeenIndexTable). When a
-    # table is missing, this generation's filter builds it from the seen
-    # table directly — the same one-time O(|seen|) cost its backfill pays.
-    bloom_tbl = SeenIndexTable(spark, store, "bloom")
-    bloom_df = bloom_tbl.merged() if use_bloom else None
-    idx_tbl = None
-    exact_idx_df = None
-    if exact_join == "prebuilt":
-        idx_tbl = SeenIndexTable(spark, store, "exact_index")
-        exact_idx_df = idx_tbl.merged()
+    side = SeenSide(spark, store)
+    # the seen-side indexes this generation's filter plan reads:
+    # incrementally maintained delta logs, merged at read (see
+    # SeenIndexTable). A missing one is None, and the filter builds it
+    # from the seen table directly — the same one-time O(|seen|) cost its
+    # backfill pays in this generation's commit.
+    reads = (("bloom",) if use_bloom else ()) + (
+        ("exact_index",) if exact_join == "prebuilt" else ()
+    )
+    merged_index = {t: side.index[t].merged() for t in reads}
 
     is_compact = bool(compact_every) and generation % compact_every == 0
-    use_head = head_cache and bool(compact_every)
-    head_cap = (compact_every + 1) * budget_per_host if use_head else 0
-    head_df = None
-    if use_head and not is_compact:
-        # None on the first generation / a pre-head store → full rank
-        head_df = store.read_or_none(spark, "head")
-        if head_df is not None:
-            head_df = head_df.select(*FRONTIER_COLS)
+    cap = head_cap(budget_per_host, compact_every)
+    # None on the first generation / a pre-head store → full rank
+    head_df = (
+        store.read_or_none(spark, "head")
+        if compact_every and not is_compact else None
+    )
+    # persist: politeness consumes pending three times (skew census +
+    # norm/big splits) — uncached that's three delta-log re-merges. Head
+    # generations never build the merge-on-read pending view at all: the
+    # head IS the schedulable set.
+    pending = (
+        _pending(frontier) if head_df is None else head_df.select(*FRONTIER_COLS)
+    ).persist()
 
-    if head_df is not None:
-        # head generations never materialize the merge-on-read pending
-        # view at all — the head IS the schedulable set
-        pending = head_df.persist()
-    else:
-        # persist: politeness consumes pending three times (skew census +
-        # norm/big splits) — uncached that's three delta-log re-merges
-        done_keys = frontier.filter(F.col("status") != "pending").select("url_hash")
-        pending = (
-            frontier.filter(F.col("status") == "pending")
-            .join(done_keys, "url_hash", "left_anti")
-            .persist()
-        )
-
-    refill = None
+    gated = blocked = refill = None
+    schedulable = pending
     if robots is not None:
         gated = apply_robots(pending, robots).persist()
         blocked = (
@@ -692,18 +706,12 @@ def run_generation(
             .select(*FRONTIER_COLS)
         )
         schedulable = gated.filter(~F.col("robots_blocked")).drop("robots_blocked")
-        # rows_in / n_blocked are NOT collected here: they ride the
-        # metrics write as a one-row aggregate over the persisted gated
-        # head with an Observation attached (see the metrics section) —
-        # removing the last synchronous driver action from the
-        # generation loop. The head-refill decision below is likewise
-        # RELATIONAL: the refill plan is always built, and degenerates
-        # to the identity at runtime when nothing was blocked
-        # (blocked_hosts is empty → AQE's empty-relation propagation
-        # replaces the broadcast semi-join with an empty relation and
-        # the anti-join with its stream side).
-        rows_in = None
-        n_blocked = None
+        # The head-refill decision below is RELATIONAL: the refill plan is
+        # always built, and degenerates to the identity at runtime when
+        # nothing was blocked (blocked_hosts is empty → AQE's
+        # empty-relation propagation replaces the broadcast semi-join with
+        # an empty relation and the anti-join with its stream side) — no
+        # synchronous driver action before the commit.
         if head_df is not None:
             # Head-cache × robots exactness fix: the head-exactness
             # argument assumes ≤ B rows leave a host's head per
@@ -721,40 +729,24 @@ def run_generation(
             # the exact schedulable top again. Robots-blocked rows BELOW
             # the head stay pending in the log (they are gated — and
             # committed blocked — at the next full-rank generation).
-            blocked_hosts = (
+            blocked_hosts = F.broadcast(
                 gated.filter(F.col("robots_blocked")).select("host_hash").distinct()
             )
-            done_keys = frontier.filter(F.col("status") != "pending").select(
-                "url_hash"
-            )
-            full_pending = frontier.filter(F.col("status") == "pending").join(
-                done_keys, "url_hash", "left_anti"
-            )
-            affected = full_pending.join(
-                F.broadcast(blocked_hosts), "host_hash", "left_semi"
-            )
             affected = (
-                apply_robots(affected, robots)
+                apply_robots(
+                    _pending(frontier).join(blocked_hosts, "host_hash", "left_semi"),
+                    robots,
+                )
                 .filter(~F.col("robots_blocked"))
                 .drop("robots_blocked")
             )
-            refreshed = top_per_host(
-                affected.select(*FRONTIER_COLS), head_cap, salt_parts
-            )
+            refreshed = top_per_host(affected.select(*FRONTIER_COLS), cap, salt_parts)
             refill = (
-                schedulable.join(
-                    F.broadcast(blocked_hosts), "host_hash", "left_anti"
-                )
+                schedulable.join(blocked_hosts, "host_hash", "left_anti")
                 .unionByName(refreshed.select(*schedulable.columns))
                 .persist()
             )
             schedulable = refill
-    else:
-        gated = None
-        blocked = None
-        schedulable = pending
-        rows_in = None
-        n_blocked = 0
 
     # per-host crawl-delay from the robots table when provided
     host_delays = None
@@ -771,9 +763,9 @@ def run_generation(
         schedulable.drop("status", "not_before", "sched_gen"),
         generation, budget_per_host, crawl_delay_sec, salt_parts,
         host_delays=host_delays,
-    )
-    updated = updated.persist()
+    ).persist()
     scheduled = updated.filter(F.col("status") == "scheduled")
+    still_pending = updated.filter(F.col("status") == "pending").select(*FRONTIER_COLS)
 
     # fetch simulation (S11): scheduled URL → its document in the corpus
     docs_canon = documents.select(
@@ -817,8 +809,9 @@ def run_generation(
         .persist()
     )
     new_base = filter_unseen(
-        discovered, seen, use_bloom=use_bloom, materialize=True, bloom=bloom_df,
-        exact_join=exact_join, exact_index=exact_idx_df,
+        discovered, side.seen, use_bloom=use_bloom, materialize=True,
+        bloom=merged_index.get("bloom"), exact_join=exact_join,
+        exact_index=merged_index.get("exact_index"),
     )
     new_rows = new_base.select(*FRONTIER_COLS)
     n_new = new_base.materialized_count
@@ -826,60 +819,39 @@ def run_generation(
     # disc_obs — the old follow-up discovered.count() job is free now
     n_discovered = int(_observed(disc_obs, {"n": 0})["n"])
 
-    # scheduled rows are fetched within the generation → status done
-    finished = scheduled.withColumn("status", F.lit("done"))
     # Driver-side actions are per-generation FIXED overhead that caps the
-    # headline rate and scaling efficiency, so ALL counts are folded into
-    # the metrics job inside the atomic commit — with or without robots
-    # the generation loop runs ZERO synchronous driver actions before the
-    # commit (the pre-r5 robots path collected a one-row aggregate before
-    # scheduling to decide the head refill; that decision is now
-    # relational — see the refill block).
+    # headline rate and scaling efficiency, so every remaining count is
+    # folded into the metrics write inside the atomic commit: the
+    # generation loop runs ZERO synchronous driver actions before it.
     wall_ms = int((time.time() - t0) * 1000)
+    # rows_in (the scheduler's input, robots-blocked rows included) and
+    # n_blocked: ONE one-row aggregate over the persisted input — `gated`
+    # when robots are given, else `pending` (count(updated) ==
+    # count(pending): politeness returns every input row) — broadcast onto
+    # every metrics row. Its Observation sits on the one-row subtree,
+    # which executes exactly once, in the metrics write.
+    totals_obs = Observation(f"totals_{generation}")
+    n_blocked_col = (
+        F.lit(0) if gated is None
+        else F.coalesce(F.sum(F.col("robots_blocked").cast("long")), F.lit(0))
+    )
+    totals = (pending if gated is None else gated).agg(
+        F.count(F.lit(1)).cast("long").alias("_rows_in"),
+        n_blocked_col.cast("long").alias("_n_blocked"),
+    ).observe(
+        totals_obs, F.max("_rows_in").alias("n"), F.max("_n_blocked").alias("b")
+    )
     # per-partition lineage (A6/north_rule): partition-level scheduled
     # counts as ONE lazy rollup — per-partition rows plus the grand-total
     # row (rollup's null group → partition_id -1) — that rides the
-    # metrics write inside the atomic commit instead of a per-generation
-    # driver collect. n_scheduled, rows_in, and n_blocked reach the
-    # driver through Observations piggybacked on the same job: zero
-    # extra actions per generation. (Each observed subtree appears
-    # exactly once in exactly one executed plan — a CollectMetrics node
-    # must never be duplicated or re-executed, or the observed count
-    # would double.)
-    rows_in_obs = None
-    totals_obs = None
-    m_src = updated
-    if gated is not None:
-        # robots path: rows_in keeps its pre-r5 meaning (the scheduler's
-        # PRE-robots input — the gated head size, blocked rows included)
-        # and n_blocked rides along, both as ONE one-row aggregate over
-        # the persisted gated head, broadcast onto every metrics row.
-        # The Observation sits on the aggregate (a one-row subtree that
-        # executes exactly once, in the metrics write) and ferries both
-        # values to the driver.
-        totals_obs = Observation(f"robots_totals_{generation}")
-        totals = gated.agg(
-            F.count(F.lit(1)).cast("long").alias("_rows_in"),
-            F.coalesce(
-                F.sum(F.col("robots_blocked").cast("long")), F.lit(0)
-            ).cast("long").alias("_n_blocked"),
-        ).observe(
-            totals_obs,
-            F.max("_rows_in").alias("n"),
-            F.max("_n_blocked").alias("b"),
-        )
-    else:
-        # relational rows_in: a one-row total over the (persisted)
-        # scheduler output, broadcast onto every metrics row — no
-        # observe node on this second scan of `updated` (it must not
-        # re-fire rows_in_obs)
-        rows_in_obs = Observation(f"rows_in_{generation}")
-        m_src = updated.observe(rows_in_obs, F.count(F.lit(1)).alias("n"))
-        totals = updated.agg(F.count(F.lit(1)).cast("long").alias("_rows_in"))
+    # metrics write; n_scheduled reaches the driver through an
+    # Observation on the same job. (Each observed subtree appears exactly
+    # once in exactly one executed plan — a CollectMetrics node must
+    # never be duplicated or re-executed, or the observed count would
+    # double.)
     sched_obs = Observation(f"sched_gen_{generation}")
     part_metrics = (
-        m_src.filter(F.col("status") == "scheduled")
-        .observe(sched_obs, F.count(F.lit(1)).alias("n_scheduled"))
+        scheduled.observe(sched_obs, F.count(F.lit(1)).alias("n_scheduled"))
         .select(F.spark_partition_id().alias("pid"))
         .rollup("pid")
         .agg(F.count("*").alias("n_sched"))
@@ -892,7 +864,7 @@ def run_generation(
     # untouched, the null-pid fallback folds into the rollup's grand
     # total when one exists (total + 0) and BECOMES the summary row when
     # the rollup was empty. Tiny aggregate (≤ partitions+2 rows).
-    fallback = updated.sparkSession.range(1).select(
+    fallback = spark.range(1).select(
         F.lit(None).cast("int").alias("pid"),
         F.lit(0).cast("long").alias("n_sched"),
     )
@@ -900,94 +872,69 @@ def run_generation(
         part_metrics.unionByName(fallback)
         .groupBy("pid")
         .agg(F.sum("n_sched").alias("n_sched"))
+        .crossJoin(F.broadcast(totals.select("_rows_in")))
     )
-    part_metrics = part_metrics.crossJoin(F.broadcast(totals.select("_rows_in")))
-    rows_in_col = F.col("_rows_in")
     metrics = part_metrics.select(
         F.lit(generation).cast("int").alias("generation"),
         F.coalesce(F.col("pid"), F.lit(-1)).cast("int").alias("partition_id"),
-        rows_in_col.alias("rows_in"),
+        F.col("_rows_in").alias("rows_in"),
         F.lit(n_new).cast("long").alias("rows_out"),
         F.col("n_sched").cast("long").alias("scheduled"),
         F.when(F.col("pid").isNull(), F.lit(n_discovered - n_new))
         .otherwise(F.lit(0)).cast("long").alias("filtered_seen"),
         F.lit(wall_ms).cast("long").alias("wall_ms"),
     )
-    # ONE atomic commit for all three tables: a crash mid-generation must
-    # never leave the frontier at g with the seen set at g-1. All three
-    # are append-mode — only this generation's delta is written (a full
+    # ONE atomic commit for every table: a crash mid-generation must
+    # never leave the frontier at g with the seen set at g-1. All are
+    # append-mode — only this generation's delta is written (a full
     # rewrite is O(10^10) I/O per generation at target scale). Every
     # compact_every generations the frontier delta log is folded into one
     # merged dir instead (still the same atomic commit).
-    delta = finished.select(*FRONTIER_COLS).unionByName(new_rows)
+    # scheduled rows are fetched within the generation → status done
+    delta = scheduled.withColumn("status", F.lit("done")).select(
+        *FRONTIER_COLS
+    ).unionByName(new_rows)
     if blocked is not None:
         delta = delta.unionByName(blocked)
     if is_compact:
         merged = (
             frontier.filter(F.col("status") != "pending")
-            .unionByName(finished.select(*FRONTIER_COLS))
-            .unionByName(
-                updated.filter(F.col("status") == "pending").select(*FRONTIER_COLS)
-            )
-            .unionByName(new_rows)
+            .unionByName(delta)
+            .unionByName(still_pending)
         )
-        if blocked is not None:
-            merged = merged.unionByName(blocked)
         frontier_entry = ("frontier", merged, generation, "compact")
     else:
         frontier_entry = ("frontier", delta, generation, "append")
-    new_keys = new_rows.select("url_hash")
-    # seen deltas follow the layout bootstrap chose (append dirs or the
-    # bucketed external table — spec already pinned in the manifest)
-    seen_mode = store.table_mode("seen") or "append"
-    writes = [
-        frontier_entry,
-        (
-            "seen",
-            new_rows.select(
-                "url_hash", "host_hash", F.lit(generation).alias("generation")
-            ),
-            generation,
-            seen_mode,
-        ),
-        ("metrics", metrics, generation, "append"),
-        bloom_tbl.entry(seen, new_keys, generation, is_compact),
-    ]
-    if idx_tbl is not None:
-        writes.append(idx_tbl.entry(seen, new_keys, generation, is_compact))
-    if use_head:
+    writes = [frontier_entry, ("metrics", metrics, generation, "append")]
+    writes += side.admit(new_rows, generation, reads, is_compact)
+    if compact_every:
         # head' = top-K·B per host of (this generation's unscheduled
         # input ∪ new discoveries). On a head generation the input was
         # the old head (cost O(head+new)); on a refill/compaction
         # generation it was the full pending view, so this IS the exact
         # refill. Demoted rows need no write — they already sit in the
         # frontier delta log as pending.
-        leftover = updated.filter(F.col("status") == "pending").select(*FRONTIER_COLS)
-        head_new = top_per_host(
-            leftover.unionByName(new_rows), head_cap, salt_parts
-        )
+        head_new = top_per_host(still_pending.unionByName(new_rows), cap, salt_parts)
         writes.append(("head", head_new, generation, "snapshot"))
+    t_commit = time.time()
     store.write_many(writes)
-    # the metrics write above executed the observed plan; get() returns
+    commit_ms = int((time.time() - t_commit) * 1000)
+    # the metrics write above executed the observed plans; get() returns
     # the filled values without launching anything
     n_scheduled = int(_observed(sched_obs, {"n_scheduled": 0})["n_scheduled"])
-    if totals_obs is not None:
-        tv = _observed(totals_obs, {"n": 0, "b": 0})
-        rows_in = int(tv["n"])
-        n_blocked = int(tv["b"])
-    else:
-        rows_in = int(_observed(rows_in_obs, {"n": 0})["n"])
-    extras = tuple(h for h in (gated, refill) if h is not None)
-    for h in (updated, pending, discovered, new_base) + extras:
-        h.unpersist()
+    totals_v = _observed(totals_obs, {"n": 0, "b": 0})
+    for h in (updated, pending, discovered, new_base, gated, refill):
+        if h is not None:
+            h.unpersist()
     return {
         "generation": generation,
-        "rows_in": rows_in,
+        "rows_in": int(totals_v["n"]),
         "scheduled": n_scheduled,
         "discovered": n_discovered,
         "new": n_new,
-        "blocked": n_blocked,
+        "blocked": int(totals_v["b"]),
         "wall_ms": wall_ms,
+        "commit_ms": commit_ms,
     }
 
 

@@ -183,7 +183,8 @@ class SeenIndexTable:
     set that rescan IS the job. A store without the table (bootstrap,
     branch-path history, or a run from before the table existed) gets a
     one-time backfill over seen ∪ new at its next write; compaction
-    folds every delta into one."""
+    folds every delta into one. Which commits write the table is
+    SeenSide.admit's rule."""
 
     def __init__(self, spark, store, table: str):
         self.table = table
@@ -213,6 +214,42 @@ class SeenIndexTable:
         if self.deltas is not None:
             delta = merge(self.deltas.unionByName(delta))
         return (self.table, delta, generation, "compact")
+
+
+class SeenSide:
+    """The seen side of a SnapshotStore: the exact `seen` table, its
+    index tables ('bloom', 'exact_index') as SeenIndexTable, and the one
+    rule that records newly admitted URLs in all of them."""
+
+    def __init__(self, spark, store):
+        self.store = store
+        self.seen = store.read(spark, "seen")
+        self.index = {t: SeenIndexTable(spark, store, t) for t in ("bloom", "exact_index")}
+
+    def admit(
+        self, new_rows: DataFrame, generation: int, reads: tuple = (),
+        compact: bool = False,
+    ) -> list:
+        """write_many entries admitting `new_rows` (url_hash, host_hash).
+
+        The seen delta follows the layout bootstrap pinned in the
+        manifest (append dirs or the bucketed external table). Every index
+        table the store already has gets a delta — skipping one leaves it
+        stale, and a stale index reads an admitted key as unseen — and so
+        does each table in `reads` (the indexes the caller's seen-filter
+        plan merges), through SeenIndexTable's backfill when it is
+        missing."""
+        entries = [(
+            "seen",
+            new_rows.select("url_hash", "host_hash", F.lit(generation).alias("generation")),
+            generation,
+            self.store.table_mode("seen") or "append",
+        )]
+        new_keys = new_rows.select("url_hash")
+        for name, tbl in self.index.items():
+            if tbl.deltas is not None or name in reads:
+                entries.append(tbl.entry(self.seen, new_keys, generation, compact))
+        return entries
 
 
 def _bucket_np(url_hash: np.ndarray, n_buckets: int) -> np.ndarray:

@@ -10,6 +10,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_heap_gb(nproc: int, mem_total_kb: int) -> int:
+    """Local-mode driver heap in GB: 2 GB per core (the driver heap IS
+    the cluster memory — room for one sort buffer per task thread plus
+    cached frames), capped at 40% of MemTotal so the Python workers and
+    the rest of the box keep room."""
+    return max(1, min(2 * nproc, int(mem_total_kb * 0.4 / 2**20)))
+
+
+def _box_heap_gb() -> int:
+    """default_heap_gb of this machine: the CPUs this process may run on
+    (what `nproc` reports) and its physical memory."""
+    if hasattr(os, "sched_getaffinity"):
+        nproc = len(os.sched_getaffinity(0))
+    else:
+        nproc = os.cpu_count() or 1
+    mem_kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return default_heap_gb(nproc, mem_kb)
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "post_processor_spark",
@@ -22,6 +41,7 @@ def get_spark(
     shuffle_partitions: defaults to cores (local mode rule of thumb —
     at cluster scale this would be 2-3x total executor cores, or left to
     AQE coalescing).
+    Driver heap: $SPARK_DRIVER_MEM, else default_heap_gb of this box.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -48,9 +68,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode: the driver heap IS the cluster memory — size it for
-        # 32 concurrent task sort buffers + cached frames (box has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or f"{_box_heap_gb()}g",
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # zstd over lz4: the shuffle-heavy frontier pass is DRAM-bandwidth

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import frontier
-from .seen import SeenIndexTable
+from .seen import SeenSide
 from .state import SnapshotStore
 
 SEED_SCHEMA = "url string, priority int, seq long"
@@ -54,50 +54,24 @@ def start_frontier_stream(
             gen_now = 0
         elif batch_df.take(1):
             new_rows = frontier.seeds_to_frontier(batch_df).select(*frontier.FRONTIER_COLS)
-            seen = store.read(spark, "seen")
+            side = SeenSide(spark, store)
             unseen_new = new_rows.join(
-                seen.select("url_hash"), "url_hash", "left_anti"
+                side.seen.select("url_hash"), "url_hash", "left_anti"
             ).persist()
-            # frontier + seen + bloom (+ exact index) are delta logs:
-            # merging a seed batch is one atomic append of the
-            # genuinely-new rows, not a rewrite. The seen-side index
-            # deltas keep those tables consistent with seen — a missing
-            # bloom delta would let these keys pass as definitely-unseen
-            # later, a missing exact-index delta would let them pass the
-            # 'prebuilt' probe as unseen and be re-admitted.
-            new_keys = unseen_new.select("url_hash")
-            writes = [
-                ("frontier", unseen_new.select(*frontier.FRONTIER_COLS), gen_now, "append"),
-                (
-                    "seen",
-                    unseen_new.select(
-                        "url_hash", "host_hash", F.lit(gen_now).alias("generation")
-                    ),
-                    gen_now,
-                    # follow the layout bootstrap pinned in the manifest
-                    store.table_mode("seen") or "append",
-                ),
-                SeenIndexTable(spark, store, "bloom").entry(seen, new_keys, gen_now),
-            ]
-            # the exact index exists once a 'prebuilt' generation built it;
-            # until then that generation backfills it over the whole seen set
-            idx = SeenIndexTable(spark, store, "exact_index")
-            if idx.deltas is not None:
-                writes.append(idx.entry(seen, new_keys, gen_now))
+            # frontier + seen-side tables are delta logs: merging a seed
+            # batch is one atomic append of the genuinely-new rows, not a
+            # rewrite (SeenSide.admit keeps every seen-side index current)
+            writes = [("frontier", unseen_new, gen_now, "append")]
+            writes += side.admit(unseen_new, gen_now)
             # merge the new seeds into the scheduler head cache too — the
             # head must see every pending row that could make a host's
             # top-B before the next full refill (no head yet: the next
             # generation builds it from pending)
             head = store.read_or_none(spark, "head")
             if head is not None:
-                cap = (sched_kwargs.get("compact_every", 8) + 1) * sched_kwargs.get(
-                    "budget_per_host", 8
-                )
                 merged = frontier.top_per_host(
-                    head.select(*frontier.FRONTIER_COLS).unionByName(
-                        unseen_new.select(*frontier.FRONTIER_COLS)
-                    ),
-                    cap,
+                    head.select(*frontier.FRONTIER_COLS).unionByName(unseen_new),
+                    frontier.head_cap(**sched_kwargs),
                 )
                 writes.append(("head", merged, gen_now, "snapshot"))
             store.write_many(writes)

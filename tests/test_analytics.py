@@ -394,6 +394,21 @@ def test_bmp_roundtrip():
     assert out.shape == (7, 5)
     assert np.allclose(out, gray.astype(np.float64), atol=1e-9)
 
+    import pytest as _pytest
+    # a payload cut short of its raster (or of its headers) is rejected
+    # before any pixel byte is read
+    for cut in (len(data) - 1, 40):
+        with _pytest.raises(ValueError, match="truncated"):
+            multimodal.decode_bmp(data[:cut])
+    # BITMAPCOREHEADER (12-byte info header, 16-bit dims) is refused, not
+    # misparsed with BITMAPINFOHEADER offsets
+    import struct
+    core = struct.pack("<IHHHH", 12, 5, 7, 1, 24)
+    pixels = data[54:]
+    head = struct.pack("<2sIHHI", b"BM", 26 + len(pixels), 0, 0, 26)
+    with _pytest.raises(NotImplementedError, match="12 bytes"):
+        multimodal.decode_bmp(head + core + pixels)
+
 
 def test_bmp_8bpp_palette_mapped():
     """8-bpp BMP pixels are color-table indices: a non-identity palette

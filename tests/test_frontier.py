@@ -426,6 +426,37 @@ def test_generation_loop_prebuilt_matches_branch(spark):
 
 
 @pytest.mark.slow
+def test_branch_generation_keeps_existing_exact_index_current(spark):
+    """A 'branch' generation on a store whose exact index a 'prebuilt'
+    generation already built must add its admitted keys to that index.
+    Otherwise a later 'prebuilt' generation merges an index missing those
+    keys: a rediscovered key passes the bloom as 'maybe', misses the
+    searchsorted probe, and is re-admitted as new."""
+    docs = fixtures.synthetic_documents(spark, 300, n_hosts=10, seed=43).persist()
+    seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(60)
+    with tempfile.TemporaryDirectory() as d:
+        store = SnapshotStore(d)
+        frontier.bootstrap(spark, store, seeds)
+        for g, plan in enumerate(["prebuilt", "branch", "prebuilt", "prebuilt"], 1):
+            frontier.run_generation(
+                spark, store, docs, g, budget_per_host=3, compact_every=0,
+                exact_join=plan,
+            )
+        merged = {
+            r["bucket"]: r["keys"]
+            for r in seen_mod.merge_exact_index(store.read(spark, "exact_index")).collect()
+        }
+        full = {
+            r["bucket"]: r["keys"]
+            for r in seen_mod.build_exact_index(store.read(spark, "seen")).collect()
+        }
+        assert sorted(merged) == sorted(full)
+        for bucket, keys in full.items():
+            assert merged[bucket] == keys, bucket
+    docs.unpersist()
+
+
+@pytest.mark.slow
 def test_compaction_preserves_state_and_resume(spark):
     """Delta-log frontier with compaction must be indistinguishable from
     the pure append log: same scheduled sets, same pending view, and a
@@ -482,12 +513,13 @@ def test_head_cache_schedules_exactly_like_full_rank(spark):
         "url", F.lit(1).alias("priority"), F.col("seq")
     ).limit(120)
     results = {}
-    for mode in (True, False):
+    # compact_every=0 turns the head cache off: the full-rank reference
+    for mode, compact_every in ((True, 2), (False, 0)):
         with tempfile.TemporaryDirectory() as d:
             store = SnapshotStore(d)
             out = frontier.run_generations(
                 spark, store, docs, seeds, n_generations=7, budget_per_host=2,
-                use_bloom=False, compact_every=2, head_cache=mode,
+                use_bloom=False, compact_every=compact_every,
             )
             done = sorted(
                 r["url_hash"]
@@ -835,6 +867,8 @@ def test_generation_metrics_rollup_contract(spark):
             assert summary[0]["scheduled"] == stats[g]["scheduled"]
             assert summary[0]["rows_in"] == stats[g]["rows_in"]
             assert all(r["rows_in"] == summary[0]["rows_in"] for r in parts)
+            # the commit is timed apart from wall_ms, which the row carries
+            assert stats[g]["commit_ms"] > 0
     docs.unpersist()
 
 
