@@ -518,8 +518,6 @@ def synthetic_nodes(docs_meta: DataFrame, referrals: DataFrame) -> DataFrame:
     NOT a document in the corpus (archived/Post-Processor/processor.py:
     901-921, node gen 746-762) — left_anti against docs + synthesized
     minimal row. Domain derived by host (the archived path-strip, P17)."""
-    from .canon import url_host
-
     dsts = (
         referrals.groupBy("dst")
         .agg(
@@ -552,6 +550,19 @@ def interest_ranking(output: DataFrame) -> DataFrame:
     return output.orderBy(F.desc("number_of_referrals"), F.asc("url"))
 
 
+def _materialize(df: DataFrame, name: str) -> DataFrame:
+    """Compute df once, now, and return a frame that reads the result
+    (an eager localCheckpoint). The jobs run under the Spark job
+    description `name`; the caller's description is restored after."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        return df.localCheckpoint()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
 def run_pipeline(
     documents: DataFrame,
     docs_meta: DataFrame,
@@ -559,10 +570,26 @@ def run_pipeline(
     citation_scope: DataFrame,
     persist: bool = False,
 ) -> DataFrame:
-    """The §3.1 lifecycle (compiler.py:79-104) as one composed plan."""
-    cites = match_citations(documents, docs_meta, citation_scope, persist=persist)
+    """The §3.1 lifecycle (compiler.py:79-104): match citations, build the
+    referral map, join both back onto every document.
+
+    Two frames have more than one consumer: `cites` (read by the referral
+    edges and by the output) and `refs`. Left lazy, Catalyst expands the
+    DAG into a tree and every consumer re-runs the whole match tree, so
+    each is materialized once here, eagerly, with localCheckpoint (job
+    descriptions `citations:cites` and `citations:refs`); the returned
+    frame is lazy over those two checkpoints. persist=True additionally
+    caches the documents ⋈ meta join inside match_citations.
+
+    Trade-off: localCheckpoint blocks live in executor storage and cannot
+    be recomputed after an executor is lost. On a cluster, write `cites`
+    and `refs` as tables and read them back instead."""
+    cites = _materialize(
+        match_citations(documents, docs_meta, citation_scope, persist=persist),
+        "citations:cites",
+    )
     decorated = decorate_scope_info(docs_meta, crawl_scope)
     edges = build_referral_edges(documents, docs_meta, cites)
-    refs = referral_lists(edges)
+    refs = _materialize(referral_lists(edges), "citations:refs")
     probed = probe_referrals(decorated, refs)
     return final_output(cites, probed)

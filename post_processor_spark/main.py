@@ -82,7 +82,11 @@ def cmd_analyze(args) -> None:
         documents = spark.read.parquet(f"{args.data}/documents.parquet")
         meta = spark.read.parquet(f"{args.data}/docs_meta.parquet")
         scope = spark.read.parquet(f"{args.data}/scope.parquet")
-    out = citations.run_pipeline(documents, meta, scope, scope, persist=True)
+    # three consumers below (parquet, CSV, count): compute the output once
+    out = citations._materialize(
+        citations.run_pipeline(documents, meta, scope, scope, persist=True),
+        "analyze:output",
+    )
     sources.write_parquet(out, f"{args.out}/final_output.parquet")
     sources.write_csv(out, f"{args.out}/output_csv", single_file=args.single_file)
     print(json.dumps({"rows": out.count(), "out": args.out}))

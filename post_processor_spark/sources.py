@@ -137,8 +137,10 @@ def write_json(df: DataFrame, path: str) -> None:
 
 
 def write_parquet(df: DataFrame, path: str) -> None:
-    """S5."""
-    df.write.mode("overwrite").parquet(path)
+    """S5. The rebalance hint lets AQE cut files at its advisory partition
+    size, so the file count follows the data size, not the partitioning
+    of the plan that produced df."""
+    df.hint("rebalance").write.mode("overwrite").parquet(path)
 
 
 def reshape_hit_record(normalized_tweets: DataFrame) -> DataFrame:

@@ -24,7 +24,7 @@ URL_T4 = "https://twitter.com/a_zionist/status/4"
 
 
 @pytest.fixture(scope="module")
-def pipeline_result(spark):
+def golden_inputs(spark):
     dom_raw = fixtures.golden_domain_raw(spark)
     twi_raw = fixtures.golden_twitter_raw(spark)
     documents = ingest.domain_docs_to_documents(dom_raw).unionByName(
@@ -34,8 +34,19 @@ def pipeline_result(spark):
         ingest.domain_docs_meta(dom_raw).unionByName(ingest.twitter_docs_meta(twi_raw))
     )
     scope = fixtures.golden_scope(spark)
-    out = citations.run_pipeline(documents, meta, scope, scope)
-    rows = {r["url"]: r.asDict() for r in out.collect()}
+    return documents, meta, scope
+
+
+@pytest.fixture(scope="module")
+def pipeline_output(golden_inputs):
+    documents, meta, scope = golden_inputs
+    return citations.run_pipeline(documents, meta, scope, scope)
+
+
+@pytest.fixture(scope="module")
+def pipeline_result(spark, golden_inputs, pipeline_output):
+    documents, meta, _ = golden_inputs
+    rows = {r["url"]: r.asDict() for r in pipeline_output.collect()}
     docs_py = _docs_py(spark, documents, meta)
     return rows, docs_py
 
@@ -203,3 +214,22 @@ def test_matches_python_oracle(pipeline_result):
             "associated_publisher", "tags", "name",
         ):
             assert got[k] == exp[k], f"{by_id[doc_id]} field {k}: {got[k]!r} != {exp[k]!r}"
+
+
+def test_persist_matches_default(golden_inputs, pipeline_result):
+    """persist=True (how the benchmark and `main.py analyze` run the
+    pipeline) gives the same rows as the oracle-checked default run."""
+    documents, meta, scope = golden_inputs
+    out = citations.run_pipeline(documents, meta, scope, scope, persist=True)
+    assert {r["url"]: r.asDict() for r in out.collect()} == pipeline_result[0]
+
+
+def test_output_plan_reads_materialized_stages(pipeline_output, pipeline_result):
+    """run_pipeline materializes its shared stages (`cites`, `refs`) once
+    each, so the output's executed plan reads them instead of re-expanding
+    the match tree in every consumer. After the run the plan string holds
+    AQE's final and initial plans: 7 broadcast exchanges here, 249 when
+    the whole match tree was inlined into every consumer."""
+    plan = pipeline_output._jdf.queryExecution().executedPlan().toString()
+    n = plan.count("BroadcastExchange")
+    assert n <= 8, f"{n} BroadcastExchange nodes in the output plan"

@@ -54,6 +54,20 @@ def test_csv_sink_stringifies_arrays(spark, tmp_path):
     assert '"[\\"x\\",\\"y\\"]"' in body
 
 
+def test_parquet_sink_sizes_files_by_data(spark, tmp_path):
+    """A small frame spread over 8 partitions is written as one file:
+    the file count follows the data size, not the plan's partitioning."""
+    df = spark.range(100).select(
+        F.col("id"), (F.col("id") % 7).alias("k")
+    ).repartition(8)
+    out = str(tmp_path / "out.parquet")
+    sources.write_parquet(df, out)
+    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    assert len(files) == 1, files
+    back = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert back == sorted(tuple(r) for r in df.collect())
+
+
 def test_reshape_hit_record(spark):
     """P22: Mini-Processor 'Hit Record' layout (Mini-Processor.py:35-58):
     column renames + literal source injection with '@' prefixing."""
