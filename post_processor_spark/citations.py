@@ -83,19 +83,19 @@ def prepare_scope(scope: DataFrame) -> dict[str, DataFrame]:
         "status_prefix",
         F.concat(F.lit("https://twitter.com/"), F.lower(F.regexp_replace(F.col("handle"), "@", "")), F.lit("/")),
     )
+    # an http-source entry whose tld equals the article's skips the WHOLE
+    # entry (processor_domain.py:44 `continue`), aliases and handles too
+    scope_skip_tld = scope_http.select("scope_seq", F.col("scope_tld").alias("skip_tld")).distinct()
     return {
         "http_hosts": scope_http_hosts,
         "alias": scope_alias,
         "handle": scope_handle,
+        "skip_tld": scope_skip_tld,
     }
 
 
-def _doc_side(documents: DataFrame, docs_meta: DataFrame, persist: bool = False):
-    """Explode spans into matcher inputs. documents: (doc_id, spans).
-
-    persist=True caches the documents⋈meta join — it feeds three
-    consumers (link rows, mention rows, text surface) and six match
-    branches; without caching each branch re-scans and re-joins."""
+def _doc_join(documents: DataFrame, docs_meta: DataFrame) -> DataFrame:
+    """documents (doc_id, spans) ⋈ the meta columns the six matchers read."""
     html_col = (
         F.coalesce(F.col("html_content"), F.lit(""))
         if "html_content" in docs_meta.columns
@@ -110,10 +110,11 @@ def _doc_side(documents: DataFrame, docs_meta: DataFrame, persist: bool = False)
         "domain",
         "doc_tld",
     )
-    d = documents.join(meta, "doc_id")
-    if persist:
-        d = d.persist()
+    return documents.join(meta, "doc_id")
 
+
+def _doc_side(d: DataFrame):
+    """Explode the joined documents (`_doc_join`) into matcher inputs."""
     link_rows = (
         d.select("doc_id", "doc_type", "doc_tld", "doc_handle_norm",
                  F.explode("spans").alias("s"))
@@ -169,13 +170,26 @@ def match_citations(
 ) -> DataFrame:
     """→ (doc_id, citation_url_or_text_alias, citation_name, anchor_text,
     found_aliases) — the four parallel arrays of
-    processor_domain.py:30-33/89, as real array<string> columns."""
+    processor_domain.py:30-33/89, as real array<string> columns.
+
+    One groupBy builds all four: the lists collect the kept rows,
+    found_aliases every article row and every kept tweet row. Each matched
+    (doc, value) keeps its rn == 1 row, so every group has a kept row and
+    the set of docs is that of the kept rows. persist=True caches
+    documents ⋈ meta for the caller to release (run_pipeline does)."""
+    d = _doc_join(documents, docs_meta)
+    return _match(d.persist() if persist else d, citation_scope)
+
+
+def _match(d: DataFrame, citation_scope: DataFrame) -> DataFrame:
+    """match_citations over the joined documents (`_doc_join`)."""
     sc = prepare_scope(citation_scope)
-    link_rows, mention_rows, doc_text = _doc_side(documents, docs_meta, persist=persist)
+    link_rows, mention_rows, doc_text = _doc_side(d)
 
     bc_hosts = F.broadcast(sc["http_hosts"])
     bc_alias = F.broadcast(sc["alias"])
     bc_handle = F.broadcast(sc["handle"])
+    bc_skip_tld = F.broadcast(sc["skip_tld"])
 
     # --- article branch 0: anchor-url citations (M1) -------------------
     art_links = link_rows.filter(F.col("doc_type") == "article")
@@ -206,15 +220,8 @@ def match_citations(
     )
     m2 = (
         alias_join
-        # article: no self-skip applies to alias branch only when the http
-        # branch skipped the WHOLE entry (processor_domain.py:44 `continue`)
-        # — an http-source entry whose tld == doc tld skips aliases too.
-        .join(
-            F.broadcast(
-                sc["http_hosts"].select("scope_seq", F.col("scope_tld").alias("skip_tld")).distinct()
-            ),
-            "scope_seq", "left",
-        )
+        # article self-skip (see prepare_scope's skip_tld)
+        .join(bc_skip_tld, "scope_seq", "left")
         .filter(
             ~(
                 (F.col("doc_type") == "article")
@@ -248,12 +255,7 @@ def match_citations(
             F.contains(F.lower(F.col("match_text")), F.concat(F.lit("@"), F.lower(F.col("handle"))))
             & F.regexp_like(F.col("match_text"), handle_pat),
         )
-        .join(
-            F.broadcast(
-                sc["http_hosts"].select("scope_seq", F.col("scope_tld").alias("skip_tld")).distinct()
-            ),
-            "scope_seq", "left",
-        )
+        .join(bc_skip_tld, "scope_seq", "left")
         .filter(~(F.col("skip_tld").isNotNull() & (F.col("doc_tld") == F.col("skip_tld"))))
         .select(
             "doc_id", F.lit("article").alias("doc_type"), "scope_seq",
@@ -332,38 +334,28 @@ def match_citations(
         ).otherwise((F.col("branch").isin(0, 2)) | (F.col("rn") == 1)),
     )
 
-    ordkey = F.struct("scope_seq", "branch", "idx1", "idx2")
-    kept = matched.filter("kept")
-    per_doc = kept.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(ordkey.alias("o"), F.col("value").alias("v")))),
+    kept = F.col("kept")
+
+    def ordered(v, keep=kept):
+        o = F.struct("scope_seq", "branch", "idx1", "idx2")
+        return F.transform(
+            F.array_sort(F.collect_list(F.when(keep, F.struct(o.alias("o"), v.alias("v"))))),
             lambda x: x["v"],
-        ).alias("citation_url_or_text_alias"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(ordkey.alias("o"), F.col("name").alias("v")))),
-            lambda x: x["v"],
-        ).alias("citation_name"),
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("anchor").isNotNull(), F.struct(ordkey.alias("o"), F.col("anchor").alias("v")))
-                )
-            ),
-            lambda x: x["v"],
-        ).alias("anchor_text"),
-    )
-    # found_aliases: articles record on raw match, tweets on kept append
-    fa = (
-        matched.filter((F.col("doc_type") == "article") | F.col("kept"))
+        )
+
+    return (
+        matched.filter((F.col("doc_type") == "article") | kept)
         .groupBy("doc_id")
         .agg(
+            ordered(F.col("value")).alias("citation_url_or_text_alias"),
+            ordered(F.col("name")).alias("citation_name"),
+            ordered(F.col("anchor"), kept & F.col("anchor").isNotNull()).alias("anchor_text"),
             F.transform(
                 F.array_sort(F.collect_set(F.struct("scope_seq", "source"))),
                 lambda x: x["source"],
-            ).alias("found_aliases")
+            ).alias("found_aliases"),
         )
     )
-    return per_doc.join(fa, "doc_id", "full")
 
 
 def decorate_scope_info(docs_meta: DataFrame, crawl_scope: DataFrame) -> DataFrame:
@@ -579,15 +571,18 @@ def run_pipeline(
     each is materialized once here, eagerly, with localCheckpoint (job
     descriptions `citations:cites` and `citations:refs`); the returned
     frame is lazy over those two checkpoints. persist=True additionally
-    caches the documents ⋈ meta join inside match_citations.
+    caches the documents ⋈ meta join while `cites` is built, and releases
+    it once the checkpoint exists.
 
     Trade-off: localCheckpoint blocks live in executor storage and cannot
     be recomputed after an executor is lost. On a cluster, write `cites`
     and `refs` as tables and read them back instead."""
-    cites = _materialize(
-        match_citations(documents, docs_meta, citation_scope, persist=persist),
-        "citations:cites",
-    )
+    d = _doc_join(documents, docs_meta)
+    if persist:
+        d = d.persist()
+    cites = _materialize(_match(d, citation_scope), "citations:cites")
+    if persist:
+        d.unpersist()
     decorated = decorate_scope_info(docs_meta, crawl_scope)
     edges = build_referral_edges(documents, docs_meta, cites)
     refs = _materialize(referral_lists(edges), "citations:refs")

@@ -18,11 +18,15 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 # Imports below are absolute (not `from . import`): spark-submit executes
 # this file as a top-level script with no parent package; the package
-# itself resolves from the --py-files zip (or the repo root).
+# itself resolves from the --py-files zip, or, for `python
+# post_processor_spark/main.py`, from the checkout this file sits in.
+if not __package__:
+    sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _spark(args):

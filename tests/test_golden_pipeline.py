@@ -233,3 +233,27 @@ def test_output_plan_reads_materialized_stages(pipeline_output, pipeline_result)
     plan = pipeline_output._jdf.queryExecution().executedPlan().toString()
     n = plan.count("BroadcastExchange")
     assert n <= 8, f"{n} BroadcastExchange nodes in the output plan"
+
+
+def test_persist_releases_its_cache(spark, golden_inputs):
+    """run_pipeline(persist=True) owns the documents ⋈ meta cache it makes
+    and releases it once the matched citations are checkpointed."""
+    documents, meta, scope = golden_inputs
+    spark.catalog.clearCache()
+    citations.run_pipeline(documents, meta, scope, scope, persist=True).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_match_plan_is_one_aggregation(spark, golden_inputs):
+    """match_citations aggregates its match union once, so the six-branch
+    match tree appears once in the executed plan: 28 broadcast exchanges
+    and 4 nested-loop joins here, 56 and 8 when the citation lists and
+    found_aliases were two aggregations joined back together. No cached
+    frame may be left over: its plan would be printed inside this one."""
+    documents, meta, scope = golden_inputs
+    spark.catalog.clearCache()
+    cites = citations.match_citations(documents, meta, scope)
+    cites.write.format("noop").mode("overwrite").save()
+    plan = cites._jdf.queryExecution().executedPlan().toString()
+    n_bx, n_bnlj = plan.count("BroadcastExchange"), plan.count("BroadcastNestedLoopJoin")
+    assert n_bx <= 28 and n_bnlj <= 4, f"{n_bx} BroadcastExchange, {n_bnlj} BroadcastNestedLoopJoin"

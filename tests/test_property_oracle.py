@@ -71,11 +71,8 @@ def corpus(draw):
     return docs, scope
 
 
-@pytest.mark.slow
-@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-@given(corpus())
-def test_pipeline_matches_oracle(spark, data):
-    docs, scope = data
+def _pipeline_and_oracle(spark, docs, scope):
+    """(Spark output rows by id, oracle rows by id) for one corpus."""
     documents = spark.createDataFrame(
         [(d["doc_id"], d["spans"]) for d in docs], DOCUMENTS
     )
@@ -93,8 +90,10 @@ def test_pipeline_matches_oracle(spark, data):
         SCOPE,
     )
     out = citations.run_pipeline(documents, meta, scope_df, scope_df)
-    got = {r["id"]: r.asDict() for r in out.collect()}
-    expected = run_oracle(docs, scope, scope)
+    return {r["id"]: r.asDict() for r in out.collect()}, run_oracle(docs, scope, scope)
+
+
+def _assert_matches(got, expected):
     assert set(got) == set(expected)
     for doc_id, exp in expected.items():
         g = got[doc_id]
@@ -106,3 +105,63 @@ def test_pipeline_matches_oracle(spark, data):
         assert g["associated_publisher"] == exp["associated_publisher"]
         assert g["tags"] == exp["tags"]
         assert g["name"] == exp["name"]
+
+
+@pytest.mark.slow
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(corpus())
+def test_pipeline_matches_oracle(spark, data):
+    docs, scope = data
+    _assert_matches(*_pipeline_and_oracle(spark, docs, scope))
+
+
+def _doc(seq, url, doc_type, domain, spans):
+    return {
+        "doc_id": str(uuid.uuid5(uuid.NAMESPACE_DNS, url)), "url": url,
+        "doc_type": doc_type, "domain": domain, "seq": seq,
+        "title": "", "author": "", "date": "", "article_text": "",
+        "retweet_count": 0, "reply_count": 0, "like_count": 0, "quote_count": 0,
+        "spans": [
+            {"kind": kind, "text": text, "media_ref": ref, "offset": i}
+            for i, (kind, text, ref) in enumerate(spans)
+        ],
+    }
+
+
+def test_found_aliases_follow_the_dedupe_rules(spark):
+    """The lists keep deduped rows only, while found_aliases records an
+    article's source on every raw match (oracle.py:77-82) and a tweet's
+    only on a kept append (oracle.py:121-125)."""
+    story = "https://alpha.com/story"
+    status = "https://twitter.com/one/status/9"
+    docs = [
+        # both alpha.com entries match the one link
+        _doc(0, "https://other.org/a", "article", "https://other.org/",
+             [("link", "the story", story)]),
+        # the second @one entry's status-url match is a duplicate
+        _doc(1, "https://twitter.com/zed/status/1", "twitter", "@zed",
+             [("link", "", status)]),
+        # tweet domain-url matches append unconditionally
+        _doc(2, "https://twitter.com/zed/status/2", "twitter", "@zed",
+             [("link", "", story)]),
+    ]
+    scope = [
+        {"source": source, "name": name, "publisher": "", "tags": "",
+         "aliases": [], "twitter_handles": handles}
+        for source, name, handles in [
+            ("https://alpha.com/", "Alpha", []),
+            ("https://alpha.com/news/", "Alpha News", []),
+            ("@one", "One", ["@one"]),
+            ("@one_archive", "One Archive", ["@one"]),
+        ]
+    ]
+    got, expected = _pipeline_and_oracle(spark, docs, scope)
+    _assert_matches(got, expected)
+    art, tw1, tw2 = (got[d["doc_id"]] for d in docs)
+    assert art["citation_url_or_text_alias"] == [story]
+    assert art["anchor_text"] == ["the story"]
+    assert art["found_aliases"] == ["https://alpha.com/", "https://alpha.com/news/"]
+    assert tw1["citation_url_or_text_alias"] == [status]
+    assert tw1["found_aliases"] == ["@one"]
+    assert tw2["citation_url_or_text_alias"] == [story, story]
+    assert tw2["citation_name"] == ["Alpha", "Alpha News"]
