@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import canon
-from .seen import SeenSide, build_bloom, filter_unseen
+from .seen import SeenSide, bloom_entry, filter_unseen
 from .state import SnapshotStore
 
 log = logging.getLogger(__name__)
@@ -906,7 +906,7 @@ def run_generation(
     else:
         frontier_entry = ("frontier", delta, generation, "append")
     writes = [frontier_entry, ("metrics", metrics, generation, "append")]
-    writes += side.admit(new_rows, generation, reads, is_compact)
+    writes += side.admit(new_rows, n_new, generation, reads, is_compact)
     if compact_every:
         # head' = top-K·B per host of (this generation's unscheduled
         # input ∪ new discoveries). On a head generation the input was
@@ -960,16 +960,18 @@ def bootstrap(
         # coerced to 'append' would only surface as a scale regression
         raise ValueError(f"seen_layout must be 'append' or 'bucketed', got {seen_layout!r}")
     fr = seeds_to_frontier(seeds).select(*FRONTIER_COLS).persist()
+    # counted before the writes: the bloom is sized from the count (and
+    # the writes then read the cached rows)
+    n = fr.count()
     seen_mode = "bucketed" if seen_layout == "bucketed" else "append"
     store.write_many(
         [
             ("frontier", fr, 0, "append"),
             ("seen", fr.select("url_hash", "host_hash", F.lit(0).alias("generation")), 0, seen_mode),
-            ("bloom", build_bloom(fr.select("url_hash")), 0, "append"),
+            bloom_entry(fr.select("url_hash"), n, 0),
         ],
         bucket_specs={"seen": (["url_hash"], seen_buckets)},
     )
-    n = fr.count()
     fr.unpersist()
     return {"generation": 0, "seeded": n}
 

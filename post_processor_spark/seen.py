@@ -23,13 +23,21 @@ Design:
   with the bloom and sends only the "maybe seen" rows (true positives +
   FPs) through a left_anti join — the plan for a seen side too big to
   broadcast, and the only one that scans the bucketed seen layout in
-  place. Both plans broadcast the whole bitmap array (8 MB at the
-  default 64 x 1 Mbit geometry), so the bloom itself must fit executor
-  memory.
+  place. Both plans broadcast the whole bitmap array, so the bloom
+  itself must fit executor memory.
+- sizing: a store's bloom is sized from its key count at BLOOM_FPR
+  (bloom_bits: ~9.6 bits a key, each of the 64 bucket bitmaps a power of
+  two of at least 64 bits). The manifest records the admitted key count
+  and the geometry; a commit that would push the count past the
+  geometry's capacity rebuilds the bloom from seen ∪ new at twice the
+  count (SeenIndexTable), so each key is rebuilt O(1) times amortized
+  and every frame of the table keeps one geometry. Readers take the
+  geometry from the bitmap's byte length.
 """
 
 from __future__ import annotations
 
+import math
 
 import numpy as np
 import pandas as pd
@@ -41,6 +49,20 @@ from pyspark.sql import types as T
 # constants from the splitmix64 reference implementation)
 _H1_MULT = np.uint64(0xBF58476D1CE4E5B9)
 _H2_MULT = np.uint64(0x94D049BB133111EB)
+
+
+# target false-positive rate of a store bloom, and the bits a key that
+# buys: m/n = ln(1/p) / (ln 2)^2 ≈ 9.59 (k = 5 hashes gives ~1.1%)
+BLOOM_FPR = 0.01
+BITS_PER_KEY = math.log(1 / BLOOM_FPR) / math.log(2) ** 2
+
+
+def bloom_bits(n: int, n_buckets: int = 64) -> int:
+    """Total bloom bits for n keys at BLOOM_FPR, rounded up so each of the
+    n_buckets bitmaps is a power of two of at least 64 bits. A geometry of
+    n_buckets × b bits holds n keys while bloom_bits(n) <= n_buckets × b."""
+    per_bucket = math.ceil(max(n, 1) * BITS_PER_KEY / n_buckets)
+    return n_buckets * max(64, 1 << (per_bucket - 1).bit_length())
 
 
 def _positions(url_hash: np.ndarray, k: int, m: int) -> np.ndarray:
@@ -68,10 +90,11 @@ def _bucket_col(n_buckets: int):
 def build_bloom(
     seen: DataFrame, n_buckets: int = 64, bits_per_bucket: int = 1 << 20, k: int = 5
 ) -> DataFrame:
-    """seen(url_hash, host_hash, ...) → (bucket, bitmap binary).
+    """seen(url_hash, ...) → (bucket, bitmap binary).
 
-    Built fully distributed: one applyInPandas group per host-hash bucket.
-    """
+    Built fully distributed: one applyInPandas group per url-hash bucket
+    (_bucket_col, the hash's high bits). The default geometry (64 × 1 Mbit,
+    8 MB) holds ~7M keys at BLOOM_FPR; bloom_bits sizes it from a count."""
     m = bits_per_bucket
 
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -171,6 +194,18 @@ def merge_bloom(deltas: DataFrame) -> DataFrame:
     return deltas.groupBy("bucket").applyInPandas(or_reduce, schema=_BLOOM_SCHEMA)
 
 
+def bloom_entry(keys: DataFrame, n: int, generation: int, mode: str = "append") -> tuple:
+    """write_many entry writing a whole store bloom over `keys` (url_hash),
+    n of them, sized for 2n keys so the table takes as many new keys again
+    before its next rebuild. The manifest record carries the key count and
+    the geometry the later deltas reuse."""
+    bits = bloom_bits(2 * n) // 64
+    return (
+        "bloom", build_bloom(keys, bits_per_bucket=bits), generation, mode,
+        {"keys": n, "bits_per_bucket": bits},
+    )
+
+
 class SeenIndexTable:
     """One seen-side delta table of a SnapshotStore — 'bloom' (bitmaps)
     or 'exact_index' (sorted url_hash shards) — and the single rule that
@@ -183,12 +218,17 @@ class SeenIndexTable:
     set that rescan IS the job. A store without the table (bootstrap,
     branch-path history, or a run from before the table existed) gets a
     one-time backfill over seen ∪ new at its next write; compaction
-    folds every delta into one. Which commits write the table is
+    folds every delta into one. The bloom is also rebuilt that way, at
+    twice the key count (bloom_entry), when a commit would fill it past
+    BLOOM_FPR, and when its manifest record has no key count (a store
+    from before the bloom was sized). Which commits write the table is
     SeenSide.admit's rule."""
 
     def __init__(self, spark, store, table: str):
         self.table = table
         self.deltas = store.read_or_none(spark, table)
+        # the bloom's {"keys", "bits_per_bucket"} record; {} without one
+        self.meta = store.table_meta(table)
 
     def _fns(self):
         if self.table == "bloom":
@@ -200,20 +240,32 @@ class SeenIndexTable:
         return None if self.deltas is None else self._fns()[1](self.deltas)
 
     def entry(
-        self, seen: DataFrame, new_keys: DataFrame, generation: int,
+        self, seen: DataFrame, new_keys: DataFrame, n_new: int, generation: int,
         compact: bool = False,
     ) -> tuple:
-        """write_many entry adding `new_keys` (url_hash) to the table."""
+        """write_many entry adding `new_keys` (url_hash, n_new rows) to the
+        table."""
         build, merge = self._fns()
-        if self.deltas is None:
+        meta = None
+        if self.table == "bloom":
+            count, bits = self.meta.get("keys"), self.meta.get("bits_per_bucket")
+            n = n_new + (seen.count() if count is None else count)
+            if count is None or bloom_bits(n) > 64 * bits:
+                return bloom_entry(
+                    seen.select("url_hash").unionByName(new_keys), n, generation,
+                    "compact",
+                )
+            meta = {"keys": n, "bits_per_bucket": bits}
+            delta = build(new_keys, bits_per_bucket=bits)
+        elif self.deltas is None:
             delta = build(seen.select("url_hash").unionByName(new_keys))
         else:
             delta = build(new_keys)
         if not compact:
-            return (self.table, delta, generation, "append")
+            return (self.table, delta, generation, "append", meta)
         if self.deltas is not None:
             delta = merge(self.deltas.unionByName(delta))
-        return (self.table, delta, generation, "compact")
+        return (self.table, delta, generation, "compact", meta)
 
 
 class SeenSide:
@@ -227,10 +279,11 @@ class SeenSide:
         self.index = {t: SeenIndexTable(spark, store, t) for t in ("bloom", "exact_index")}
 
     def admit(
-        self, new_rows: DataFrame, generation: int, reads: tuple = (),
+        self, new_rows: DataFrame, n_new: int, generation: int, reads: tuple = (),
         compact: bool = False,
     ) -> list:
-        """write_many entries admitting `new_rows` (url_hash, host_hash).
+        """write_many entries admitting `new_rows` (url_hash, host_hash),
+        n_new rows (the bloom's key count grows by it).
 
         The seen delta follows the layout bootstrap pinned in the
         manifest (append dirs or the bucketed external table). Every index
@@ -248,7 +301,7 @@ class SeenSide:
         new_keys = new_rows.select("url_hash")
         for name, tbl in self.index.items():
             if tbl.deltas is not None or name in reads:
-                entries.append(tbl.entry(self.seen, new_keys, generation, compact))
+                entries.append(tbl.entry(self.seen, new_keys, n_new, generation, compact))
         return entries
 
 
@@ -263,18 +316,25 @@ def _bucket_np(url_hash: np.ndarray, n_buckets: int) -> np.ndarray:
     )
 
 
-def _collect_bitmap(bloom: DataFrame, n_buckets: int, m: int) -> np.ndarray:
+def _collect_bitmap(bloom: DataFrame, n_buckets: int) -> tuple[np.ndarray, int]:
     """Collect the (bucket, bitmap) frame into one flat (n_buckets * m/8)
-    byte array: the global bit address of position p in bucket b is
-    b * m + p, so the probe is a pure gather — no per-bucket Python
-    loop."""
-    bits_flat = np.zeros(n_buckets * (m // 8), dtype=np.uint8)
-    for r in bloom.collect():
+    byte array and return it with m, the bits a bucket, read from the
+    bitmaps' byte length: the global bit address of position p in bucket
+    b is b * m + p, so the probe is a pure gather — no per-bucket Python
+    loop. A frame whose bitmaps differ in length mixes geometries, which
+    no probe can read: ValueError."""
+    rows = bloom.collect()
+    lengths = sorted({len(r["bitmap"]) for r in rows})
+    if len(lengths) > 1:
+        raise ValueError(f"bloom bitmaps mix byte lengths {lengths}")
+    nbytes = lengths[0] if lengths else 8  # no rows: no keys, any m reads unseen
+    bits_flat = np.zeros(n_buckets * nbytes, dtype=np.uint8)
+    for r in rows:
         b = int(r["bucket"])
-        bits_flat[b * (m // 8):(b + 1) * (m // 8)] = np.frombuffer(
+        bits_flat[b * nbytes:(b + 1) * nbytes] = np.frombuffer(
             r["bitmap"], dtype=np.uint8
         )
-    return bits_flat
+    return bits_flat, nbytes * 8
 
 
 def _might_contain(
@@ -295,8 +355,7 @@ def _might_contain(
 
 
 def _unseen_udf(
-    spark, bloom: DataFrame, exact_index: DataFrame, n_buckets: int,
-    bits_per_bucket: int, k: int = 5,
+    spark, bloom: DataFrame, exact_index: DataFrame, n_buckets: int, k: int = 5,
 ):
     """Pandas UDF (url_hash) → unseen boolean: bloom pre-filter then
     exact searchsorted resolution of the maybe subset, all inside one
@@ -307,8 +366,7 @@ def _unseen_udf(
     exact shards union-merged into ONE globally sorted key array (the
     bucket partitioning exists for distributed build/maintenance, not
     for the broadcast probe)."""
-    m = bits_per_bucket
-    bits_flat = _collect_bitmap(bloom, n_buckets, m)
+    bits_flat, m = _collect_bitmap(bloom, n_buckets)
     shards = [
         np.frombuffer(r["keys"], dtype=np.int64) for r in exact_index.collect()
     ]
@@ -340,17 +398,14 @@ def bloom_filter_candidates(
     candidates: DataFrame,
     bloom: DataFrame,
     n_buckets: int = 64,
-    bits_per_bucket: int = 1 << 20,
     k: int = 5,
 ) -> DataFrame:
     """Tag candidates with maybe_seen. The bitmaps are collected once and
     broadcast to workers; membership is a scalar pandas UDF over url_hash
     — a narrow map, NO shuffle, and only the hash long crosses the Arrow
     channel (candidate rows stay in the JVM)."""
-    m = bits_per_bucket
-    bc = candidates.sparkSession.sparkContext.broadcast(
-        _collect_bitmap(bloom, n_buckets, m)
-    )
+    bits_flat, m = _collect_bitmap(bloom, n_buckets)
+    bc = candidates.sparkSession.sparkContext.broadcast(bits_flat)
 
     @F.pandas_udf("boolean")
     def might_contain(url_hash: pd.Series) -> pd.Series:
@@ -377,7 +432,6 @@ def filter_unseen(
     seen: DataFrame,
     use_bloom: bool = True,
     n_buckets: int = 64,
-    bits_per_bucket: int = 1 << 20,
     materialize: bool = False,
     bloom: DataFrame | None = None,
     exact_join: str = "branch",
@@ -388,9 +442,10 @@ def filter_unseen(
     use_bloom=False: the plain left_anti join (the reference result).
 
     bloom: prebuilt (bucket, bitmap) frame (e.g. the incrementally
-    maintained store table via merge_bloom). When omitted, the bloom is
-    built from the full seen table — an O(|seen|) rescan acceptable for
-    one-shot use, NOT per generation at scale.
+    maintained store table via merge_bloom); its geometry is read from
+    the bitmaps. When omitted, the bloom is built from the full seen
+    table, sized by bloom_bits from its count — an O(|seen|) rescan
+    acceptable for one-shot use, NOT per generation at scale.
 
     exact_join='branch' (default): two-branch union — definitely-unseen
     rows bypass the exact join as a separate plan branch; maybe-seen
@@ -405,9 +460,10 @@ def filter_unseen(
     arrays; membership is vectorized np.searchsorted on the bloom-maybe
     subset only. NO join operator and NO per-pass serial hash-relation
     build — the whole seen filter is a narrow map, so the pass's only
-    non-parallel cost is the bitmap+index collect/broadcast (~40 MB at a
-    4M-key seen side). Valid while the index fits executor memory; at
-    10^10 keys use the branch path + bucketed layout.
+    non-parallel cost is the bitmap+index collect/broadcast: 8 bytes a
+    key for the index plus 1.2–4.8 for a store bloom (bloom_entry).
+    Valid while the index fits executor memory; at 10^10 keys use the
+    branch path + bucketed layout.
 
     materialize=True: persist + force the RESULT, then release the
     intermediate cache. Use when the caller consumes the result more than
@@ -429,24 +485,19 @@ def filter_unseen(
         )
     if bloom is None:
         # Ad-hoc one-shot build (callers on the per-generation path pass
-        # the incrementally-maintained store bloom instead): right-size
-        # the filter to the actual seen count rather than paying the
-        # default 10^8-key geometry (8 MB of bitmaps built, collected and
-        # broadcast) for a small table. ~10 bits/key keeps FPR ~1%; the
-        # count job is one cheap pass over a table this path only ever
-        # sees at one-shot scale.
-        cnt = seen.count()
-        total_bits = 1 << max(13, (max(cnt, 1) * 10 - 1).bit_length())
-        bits_per_bucket = min(bits_per_bucket, max(1 << 13, total_bits // n_buckets))
-        bloom = build_bloom(seen, n_buckets, bits_per_bucket)
+        # the incrementally-maintained store bloom instead), sized from
+        # the seen count like a store bloom; the count job is one cheap
+        # pass over a table this path only ever sees at one-shot scale.
+        bloom = build_bloom(
+            seen, n_buckets, bloom_bits(seen.count(), n_buckets) // n_buckets
+        )
     if exact_join == "prebuilt":
         if exact_index is None:
             exact_index = build_exact_index(seen, n_buckets)
         return _finish(
             candidates.filter(
                 _unseen_udf(
-                    candidates.sparkSession, bloom, exact_index, n_buckets,
-                    bits_per_bucket,
+                    candidates.sparkSession, bloom, exact_index, n_buckets
                 )(F.col("url_hash"))
             ),
             materialize,
@@ -454,9 +505,7 @@ def filter_unseen(
     # persist: both branches (definitely-unseen ∪ resolved-maybe) consume
     # `tagged`; without a cache each union branch re-runs the candidate
     # lineage AND the bloom check
-    tagged = bloom_filter_candidates(
-        candidates, bloom, n_buckets, bits_per_bucket
-    ).persist()
+    tagged = bloom_filter_candidates(candidates, bloom, n_buckets).persist()
     definitely_unseen = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     resolved = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")

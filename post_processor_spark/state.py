@@ -198,7 +198,7 @@ class SnapshotStore:
 
     def write_many(
         self,
-        writes: list[tuple[str, DataFrame, int, str]],
+        writes: list[tuple],
         bucket_specs: dict[str, tuple[list[str], int]] | None = None,
     ) -> None:
         """Multi-table transaction: all parquet dirs are written first,
@@ -207,6 +207,12 @@ class SnapshotStore:
         no table can be observed at generation g while a sibling is still
         at g-1 (the cross-table consistency Iceberg transactions give;
         run_generation commits frontier+seen+metrics this way).
+
+        Each write is (table, df, generation, mode), with an optional
+        fifth element: a JSON-able dict that the same manifest commit
+        stores as the table's record (table_meta). A write without one
+        drops the table's record, so no record outlives the data it
+        describes.
 
         The per-table writes launch CONCURRENTLY (one thread per table;
         Spark schedules jobs from multiple threads into the same pool):
@@ -224,7 +230,7 @@ class SnapshotStore:
         manifest = self._read_manifest()
         jobs: list = []
         appends: list = []
-        for table, df, generation, mode in writes:
+        for table, df, generation, mode, *meta in writes:
             table_mode = "append" if mode == "compact" else mode
             t = manifest["tables"].setdefault(
                 table, {"current": None, "history": [], "mode": table_mode, "dirs": {}}
@@ -235,6 +241,9 @@ class SnapshotStore:
                 raise ValueError(
                     f"table {table!r} is {t['mode']}-mode; cannot {mode}-write"
                 )
+            t.pop("meta", None)
+            if meta and meta[0]:
+                t["meta"] = meta[0]
             if mode == "bucketed":
                 # Append into the ONE bucketed external table; visibility is
                 # gated by `gen_col <= current` at read, not by dir refs.
@@ -328,6 +337,11 @@ class SnapshotStore:
             return self.read(spark, table)
         except FileNotFoundError:
             return None
+
+    def table_meta(self, table: str) -> dict:
+        """The record the table's last write stored (write_many), or {}."""
+        t = self._read_manifest()["tables"].get(table)
+        return {} if t is None else t.get("meta", {})
 
     def table_mode(self, table: str) -> str | None:
         t = self._read_manifest()["tables"].get(table)

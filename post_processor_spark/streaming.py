@@ -62,7 +62,7 @@ def start_frontier_stream(
             # batch is one atomic append of the genuinely-new rows, not a
             # rewrite (SeenSide.admit keeps every seen-side index current)
             writes = [("frontier", unseen_new, gen_now, "append")]
-            writes += side.admit(unseen_new, gen_now)
+            writes += side.admit(unseen_new, unseen_new.count(), gen_now)
             # merge the new seeds into the scheduler head cache too — the
             # head must see every pending row that could make a host's
             # top-B before the next full refill (no head yet: the next

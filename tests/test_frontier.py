@@ -140,9 +140,9 @@ def test_merge_bloom_or_reduces_deltas(spark):
 
 def test_incremental_bloom_matches_full_rebuild(spark):
     """After several generations the store's delta-log bloom, OR-merged,
-    must be byte-identical to a bloom rebuilt from the full seen table —
-    proof the per-generation O(|seen|) rescan is gone without changing
-    membership semantics."""
+    must be byte-identical to a bloom rebuilt from the full seen table at
+    the store's recorded geometry — proof the per-generation O(|seen|)
+    rescan is gone without changing membership semantics."""
     docs = fixtures.synthetic_documents(spark, 400, n_hosts=12, seed=31).persist()
     seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(60)
     with tempfile.TemporaryDirectory() as d:
@@ -155,12 +155,122 @@ def test_incremental_bloom_matches_full_rebuild(spark):
             r["bucket"]: r["bitmap"]
             for r in seen_mod.merge_bloom(store.read(spark, "bloom")).collect()
         }
+        bits = store.table_meta("bloom")["bits_per_bucket"]
         full = {
             r["bucket"]: r["bitmap"]
-            for r in seen_mod.build_bloom(store.read(spark, "seen")).collect()
+            for r in seen_mod.build_bloom(
+                store.read(spark, "seen"), bits_per_bucket=bits
+            ).collect()
         }
         assert merged == full
     docs.unpersist()
+
+
+def _bloom_fpr(spark, store, n_probe: int = 20_000) -> float:
+    """False-positive rate of the store's merged bloom on n_probe hashed
+    keys that are not in its seen table."""
+    probe = spark.range(n_probe).select(
+        F.xxhash64(F.col("id"), F.lit("non-member")).alias("url_hash")
+    ).join(store.read(spark, "seen").select("url_hash"), "url_hash", "left_anti")
+    tagged = seen_mod.bloom_filter_candidates(
+        probe, seen_mod.merge_bloom(store.read(spark, "bloom"))
+    )
+    row = tagged.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(F.col("maybe_seen").cast("long")).alias("fp")
+    ).first()
+    return row["fp"] / row["n"]
+
+
+def test_bloom_sized_from_key_count_with_resize(spark):
+    """The store bloom is sized from its key count: bootstrap sizes it for
+    twice the seeds, and a generation that would fill it past the target
+    FPR rebuilds it at twice the new count. After bootstrap plus three
+    generations the manifest's key count equals the seen rows, the merged
+    bloom is within 4x of bloom_bits(n), and the FPR on non-members stays
+    near BLOOM_FPR. A run resumed after generation 1, whose resumed span
+    includes the resize, ends in the same frontier, seen set and bloom."""
+    docs = fixtures.synthetic_documents(spark, 1000, n_hosts=20, seed=37).persist()
+    seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(100)
+    opts = dict(budget_per_host=6, compact_every=0, exact_join="prebuilt")
+    with tempfile.TemporaryDirectory() as d1, tempfile.TemporaryDirectory() as d2:
+        s_full = SnapshotStore(d1)
+        out = frontier.run_generations(spark, s_full, docs, seeds, 3, **opts)
+        s_resume = SnapshotStore(d2)
+        frontier.run_generations(spark, s_resume, docs, seeds, 1, **opts)
+        before = s_resume.table_meta("bloom")["bits_per_bucket"]
+        resumed = frontier.run_generations(
+            spark, s_resume, docs, None, 2, start_generation=1, **opts
+        )
+        assert s_resume.table_meta("bloom")["bits_per_bucket"] > before  # resized
+        assert [(g["scheduled"], g["new"]) for g in out[2:]] == [
+            (g["scheduled"], g["new"]) for g in resumed
+        ]
+        for table in ("frontier", "seen", "bloom"):
+            a, b = s_full.read(spark, table), s_resume.read(spark, table)
+            assert a.subtract(b).count() == 0 and b.subtract(a).count() == 0, table
+        assert s_full.table_meta("bloom") == s_resume.table_meta("bloom")
+
+        n = s_full.read(spark, "seen").count()
+        assert s_full.table_meta("bloom")["keys"] == n
+        bloom = seen_mod.merge_bloom(s_full.read(spark, "bloom")).collect()
+        assert sum(len(r["bitmap"]) for r in bloom) <= 4 * seen_mod.bloom_bits(n) / 8
+        assert _bloom_fpr(spark, s_full) <= 0.03
+    docs.unpersist()
+
+
+def test_legacy_unsized_bloom_is_rebuilt_at_next_admit(spark):
+    """A store from before the bloom was sized (a 64 x 1 Mbit bloom, no
+    key count in the manifest) runs exactly like a fresh one, and its
+    first admit rebuilds the bloom at the sized geometry in compact mode,
+    so no delta of another size is ever appended to the legacy bitmaps."""
+    docs = fixtures.synthetic_documents(spark, 400, n_hosts=12, seed=31).persist()
+    seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(60)
+    runs = {}
+    with tempfile.TemporaryDirectory() as d1, tempfile.TemporaryDirectory() as d2:
+        for kind, d in (("fresh", d1), ("legacy", d2)):
+            store = SnapshotStore(d)
+            frontier.bootstrap(spark, store, seeds)
+            if kind == "legacy":
+                # the bloom pre-sizing code wrote, with no manifest record
+                store.write_many([(
+                    "bloom", seen_mod.build_bloom(store.read(spark, "seen")), 0,
+                    "compact",
+                )])
+                assert store.table_meta("bloom") == {}
+            runs[kind] = [
+                frontier.run_generation(
+                    spark, store, docs, g, budget_per_host=4, compact_every=0,
+                    exact_join="prebuilt",
+                )
+                for g in (1, 2)
+            ]
+            if kind == "legacy":
+                meta = store.table_meta("bloom")
+                assert meta["keys"] == store.read(spark, "seen").count()
+                assert meta["bits_per_bucket"] < 1 << 20
+                # generation 1 rebuilt (compacted) the table, generation 2
+                # appended one delta at the recorded geometry
+                assert store.generations("bloom") == [1, 2]
+                lengths = {
+                    len(r["bitmap"]) for r in store.read(spark, "bloom").collect()
+                }
+                assert lengths == {meta["bits_per_bucket"] // 8}
+    assert [(g["scheduled"], g["new"]) for g in runs["legacy"]] == [
+        (g["scheduled"], g["new"]) for g in runs["fresh"]
+    ]
+    docs.unpersist()
+
+
+def test_collect_bitmap_rejects_mixed_geometries(spark):
+    """A bloom frame mixing bitmap lengths has no single geometry to probe
+    with: the collect names the lengths instead of failing on a numpy
+    shape error."""
+    keys = spark.range(200).select(F.xxhash64("id").alias("url_hash"))
+    mixed = seen_mod.build_bloom(keys, n_buckets=8, bits_per_bucket=1 << 10).unionByName(
+        seen_mod.build_bloom(keys, n_buckets=8, bits_per_bucket=1 << 12)
+    )
+    with pytest.raises(ValueError, match=r"\[128, 512\]"):
+        seen_mod.filter_unseen(keys, keys, n_buckets=8, bloom=mixed)
 
 
 def test_politeness_budget_and_order(spark):
