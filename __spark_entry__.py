@@ -561,11 +561,13 @@ def _q_url_canon(spark, sf):
         F.lit("HTTPS://WWW.Example"), (F.col("c_custkey") % 50).cast("string"),
         F.lit(".COM/path/"), F.col("c_custkey").cast("string"), F.lit("?x=1#frag"),
     )
-    return c.select(
+    hosts = c.select(
         "c_custkey",
         canon.canonical_url(url).alias("canonical_url"),
         canon.url_host(url).alias("host"),
-        canon.registrable_domain(canon.url_host(url)).alias("registrable_domain"),
+    )
+    return canon.attach_registrable_domain(
+        hosts, "host", "registrable_domain"
     ).orderBy("c_custkey")
 
 

@@ -269,34 +269,22 @@ def host_graph(
     interest/citation outputs aggregate toward (processor.py:81-97 keys
     by source domain).
 
-    Both endpoints resolve their PSL suffix via canon.attach_tld_parts —
-    the broadcast-join path, NOT the In-list expression version: this
-    operator instantiates the suffix logic twice (src + dst), and two
-    copies of the ~1,450-literal In-lists in one plan cost ~10 s of
-    analysis/codegen before any data moves (the same plan-size failure
-    mode _suffix_dims documents for the citations pipeline; measured
-    24 s → 2 s here). So `www.a.com/x` and `a.com/y` fold into one
-    node; derivation is two broadcast joins + ONE domain-pair-keyed
-    aggregation with map-side partials; self-edges (intra-domain links)
-    are dropped by default — they dominate raw link counts and carry no
-    cross-site authority.
+    Both endpoints resolve their registrable domain via
+    canon.attach_registrable_domain, canon's one public-suffix rule
+    (broadcast joins against the suffix dimensions), so `www.a.com/x`
+    and `a.com/y` fold into one node; derivation is those joins + ONE
+    domain-pair-keyed aggregation with map-side partials; self-edges
+    (intra-domain links) are dropped by default — they dominate raw link
+    counts and carry no cross-site authority.
     """
-    g = canon.attach_tld_parts(edges, src_col, "_sp")
-    g = canon.attach_tld_parts(g, dst_col, "_dp")
-
-    def reg(p):
-        # dom.suf when a registrable label exists; else suf == the whole
-        # host (slice clamps) — same fallback as canon.registrable_domain
-        return F.when(
-            p["dom"] != "", F.concat_ws(".", p["dom"], p["suf"])
-        ).otherwise(p["suf"])
-
-    out = (
-        g.groupBy(
-            reg(F.col("_sp")).alias("src_domain"),
-            reg(F.col("_dp")).alias("dst_domain"),
-        )
-        .agg(F.count("*").cast("long").alias("weight"))
+    g = edges.select(
+        canon.url_host(F.col(src_col)).alias("_sh"),
+        canon.url_host(F.col(dst_col)).alias("_dh"),
+    )
+    g = canon.attach_registrable_domain(g, "_sh", "src_domain")
+    g = canon.attach_registrable_domain(g, "_dh", "dst_domain")
+    out = g.groupBy("src_domain", "dst_domain").agg(
+        F.count("*").cast("long").alias("weight")
     )
     if drop_self:
         out = out.where(F.col("src_domain") != F.col("dst_domain"))

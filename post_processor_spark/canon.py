@@ -246,73 +246,6 @@ def _host_labels(host: Column) -> Column:
     return F.split(host, r"\.")
 
 
-def _suffix_len(host: Column) -> Column:
-    """1, 2 or 3: number of labels belonging to the public suffix.
-
-    PSL semantics: explicit suffixes (two- and three-label), wildcard
-    TLDs (*.tld), second-level wildcards (*.kawasaki.jp), and wildcard
-    exceptions (!www.ck, !city.kawasaki.jp → registrable). Evaluation
-    order matches the PSL: longest match wins; exceptions beat wildcards.
-    Membership uses Column.isin — Catalyst compiles an In over >10 values
-    to InSet (hash-set lookup), where array_contains over a literal array
-    is a linear scan per row (~1,500 entries here)."""
-    labels = _host_labels(host)
-    n = F.size(labels)
-    tld = F.element_at(labels, -1)
-    last2 = F.concat_ws(".", F.slice(labels, F.greatest(n - 1, F.lit(1)), 2))
-    last3 = F.concat_ws(".", F.slice(labels, F.greatest(n - 2, F.lit(1)), 3))
-    in_wild2 = last2.isin(_WILDCARD_SECOND)
-    in_exc3 = last3.isin(_WILDCARD_SECOND_EXCEPTIONS)
-    # n>=3 (not 4) for the wildcard clause: a host that IS a pure
-    # wildcard suffix (foo.kawasaki.jp) gets suffix_len = n, and
-    # registrable_domain's < suffix_len+1 convention returns the host —
-    # same convention as bare TLD-only hosts.
-    is_three = (n >= 3) & (
-        last3.isin(_THREE_LEVEL_SUFFIXES) | (in_wild2 & ~in_exc3)
-    )
-    is_two = (n >= 3) & (
-        last2.isin(_TWO_LEVEL_SUFFIXES)
-        | (tld.isin(_WILDCARD_TLDS) & ~last2.isin(_WILDCARD_EXCEPTIONS))
-        | (in_wild2 & in_exc3)
-    )
-    return F.when(is_three, F.lit(3)).when(is_two, F.lit(2)).otherwise(F.lit(1))
-
-
-def registrable_domain(host: Column) -> Column:
-    """eTLD+1: 'news.bbc.co.uk' → 'bbc.co.uk'; 'www.aljazeera.com' →
-    'aljazeera.com'. Hosts with < suffix_len+1 labels return the host."""
-    labels = _host_labels(host)
-    n = F.size(labels)
-    k = _suffix_len(host) + 1
-    start = F.greatest(n - k + 1, F.lit(1))
-    return F.concat_ws(".", F.slice(labels, start, k))
-
-
-def tld_triple(url: Column) -> Column:
-    """Emulates the reference's tldextract join: 'sub.domain.suffix' when a
-    subdomain exists, else 'domain.suffix'
-    (processor_domain.py:47-50). For matching purposes this equals the
-    full lower-cased host, which is exactly what '.'.join(ext) produces —
-    kept as its own function to document the parity point."""
-    return url_host(url)
-
-
-def tld_parts(url: Column) -> Column:
-    """struct(sub, dom, suf) — mirrors tldextract.ExtractResult equality
-    used for the self-citation skip (processor_domain.py:43-45)."""
-    host = url_host(url)
-    labels = _host_labels(host)
-    n = F.size(labels)
-    slen = _suffix_len(host)
-    suf = F.concat_ws(".", F.slice(labels, F.greatest(n - slen + 1, F.lit(1)), slen))
-    dom = F.when(n > slen, F.element_at(labels, -(slen + 1))).otherwise(F.lit(""))
-    nsub = F.greatest(n - slen - 1, F.lit(0))
-    sub = F.when(nsub > 0, F.concat_ws(".", F.slice(labels, 1, nsub))).otherwise(
-        F.lit("")
-    )
-    return F.struct(sub.alias("sub"), dom.alias("dom"), suf.alias("suf"))
-
-
 _DIM_CACHE: dict = {}
 
 
@@ -327,10 +260,11 @@ def _suffix_dims(spark):
     pipeline references the tld struct from nine matcher branches, so
     the analyzed plan held ~200 copies of the ~1,700-literal suffix
     sets (23 MB plan string, 61 s optimizer walk, 20 MiB task
-    binaries). A LogicalRDD leaf holds an RDD *reference*; copies cost
-    bytes, and the suffix strings live once, as data — which is how a
-    1,700-row dimension should travel anyway (broadcast join), per the
-    same rule as any other small dim."""
+    binaries), and even one copy costs ~7,000 py4j calls to build. A
+    LogicalRDD leaf holds an RDD *reference*; copies cost bytes, and
+    the suffix strings live once, as data — which is how a 1,700-row
+    dimension should travel anyway (broadcast join), per the same rule
+    as any other small dim."""
     sc = spark.sparkContext
     if _DIM_CACHE.get("app") != sc.applicationId:
         _DIM_CACHE.clear()
@@ -344,42 +278,40 @@ def _suffix_dims(spark):
     return _DIM_CACHE["s2"], _DIM_CACHE["s3"]
 
 
-def attach_tld_parts(df, src_col: str, out_col: str):
-    """df + `out_col` = struct(sub, dom, suf) of url_host(src_col) —
-    semantically identical to tld_parts(), but suffix membership is
-    resolved by two broadcast LEFT joins against the RDD-backed suffix
-    dimensions instead of giant In-lists (see _suffix_dims for why; the
-    golden citations pipeline went from ~190 s analysis+planning /
-    23 MB plan to seconds). The joins are null-safe by construction:
-    an unmatched (or null) key leaves the marker column null, and
-    isNotNull() then behaves exactly like the expression version's
-    isin() inside when() — null and false fall through identically.
-    Use this in pipelines that fan the struct out to many branches;
-    tld_parts() stays the right call in single-expression contexts
-    (one instance in the plan ≈ the same cost either way)."""
+def _attach_suffix_len(df, host: Column):
+    """df + `_tp_lb` (the labels of `host`) + `_tp_slen` (1, 2 or 3: the
+    number of labels belonging to the public suffix) — the one
+    public-suffix rule.
+
+    PSL semantics: explicit suffixes (two- and three-label), wildcard
+    TLDs (*.tld), second-level wildcards (*.kawasaki.jp), and wildcard
+    exceptions (!www.ck, !city.kawasaki.jp → registrable). Evaluation
+    order matches the PSL: longest match wins; exceptions beat wildcards.
+    The explicit suffixes resolve by two broadcast LEFT joins against
+    the _suffix_dims dimensions. The joins are null-safe by
+    construction: an unmatched (or null) key leaves the marker column
+    null, and isNotNull() inside when() falls through like false."""
     s2d, s3d = _suffix_dims(df.sparkSession)
-    host = url_host(F.col(src_col))
-    df = df.withColumn("_tp_h", host).withColumn(
-        "_tp_lb", _host_labels(F.col("_tp_h"))
-    )
-    n = F.size(F.col("_tp_lb"))
+    df = df.withColumn("_tp_lb", _host_labels(host))
+    labels = F.col("_tp_lb")
+    n = F.size(labels)
     df = (
         df.withColumn(
-            "_tp_l2",
-            F.concat_ws(".", F.slice(F.col("_tp_lb"), F.greatest(n - 1, F.lit(1)), 2)),
+            "_tp_l2", F.concat_ws(".", F.slice(labels, F.greatest(n - 1, F.lit(1)), 2))
         )
         .withColumn(
-            "_tp_l3",
-            F.concat_ws(".", F.slice(F.col("_tp_lb"), F.greatest(n - 2, F.lit(1)), 3)),
+            "_tp_l3", F.concat_ws(".", F.slice(labels, F.greatest(n - 2, F.lit(1)), 3))
         )
         .join(F.broadcast(s2d), F.col("_tp_l2") == F.col("_sfx2"), "left")
         .join(F.broadcast(s3d), F.col("_tp_l3") == F.col("_sfx3"), "left")
     )
-    labels = F.col("_tp_lb")
-    n = F.size(labels)
     tld = F.element_at(labels, -1)
     in_wild2 = F.col("_tp_l2").isin(_WILDCARD_SECOND)
     in_exc3 = F.col("_tp_l3").isin(_WILDCARD_SECOND_EXCEPTIONS)
+    # n>=3 (not 4) for the wildcard clause: a host that IS a pure
+    # wildcard suffix (foo.kawasaki.jp) gets suffix_len = n, and the
+    # registrable domain's < suffix_len+1 convention returns the host —
+    # same convention as bare TLD-only hosts.
     is_three = (n >= 3) & (F.col("_sfx3").isNotNull() | (in_wild2 & ~in_exc3))
     is_two = (n >= 3) & (
         F.col("_sfx2").isNotNull()
@@ -387,8 +319,21 @@ def attach_tld_parts(df, src_col: str, out_col: str):
         | (in_wild2 & in_exc3)
     )
     slen = F.when(is_three, F.lit(3)).when(is_two, F.lit(2)).otherwise(F.lit(1))
-    df = df.withColumn("_tp_slen", slen)
-    slen = F.col("_tp_slen")
+    return df.withColumn("_tp_slen", slen).drop("_tp_l2", "_tp_l3", "_sfx2", "_sfx3")
+
+
+def attach_tld_parts(df, src_col: str, out_col: str):
+    """df + `out_col` = struct(sub, dom, suf) of url_host(src_col) —
+    mirrors the tldextract.ExtractResult equality the reference uses for
+    the self-citation skip (processor_domain.py:43-45). Suffix
+    membership comes from _attach_suffix_len, whose broadcast joins keep
+    the ~1,700 suffix literals out of the plan tree, so pipelines that
+    fan the struct out to many branches stay cheap to plan (the golden
+    citations pipeline went from ~190 s analysis+planning / 23 MB plan
+    to seconds)."""
+    df = _attach_suffix_len(df, url_host(F.col(src_col)))
+    labels, slen = F.col("_tp_lb"), F.col("_tp_slen")
+    n = F.size(labels)
     suf = F.concat_ws(".", F.slice(labels, F.greatest(n - slen + 1, F.lit(1)), slen))
     dom = F.when(n > slen, F.element_at(labels, -(slen + 1))).otherwise(F.lit(""))
     nsub = F.greatest(n - slen - 1, F.lit(0))
@@ -397,7 +342,19 @@ def attach_tld_parts(df, src_col: str, out_col: str):
     )
     return df.withColumn(
         out_col, F.struct(sub.alias("sub"), dom.alias("dom"), suf.alias("suf"))
-    ).drop("_tp_h", "_tp_lb", "_tp_l2", "_tp_l3", "_tp_slen", "_sfx2", "_sfx3")
+    ).drop("_tp_lb", "_tp_slen")
+
+
+def attach_registrable_domain(df, host: str, out_col: str):
+    """df + `out_col` = eTLD+1 of the host column `host`:
+    'news.bbc.co.uk' → 'bbc.co.uk'; 'www.aljazeera.com' →
+    'aljazeera.com'. Hosts with < suffix_len+1 labels return the host."""
+    df = _attach_suffix_len(df, F.col(host))
+    labels, slen = F.col("_tp_lb"), F.col("_tp_slen")
+    start = F.greatest(F.size(labels) - slen, F.lit(1))
+    return df.withColumn(
+        out_col, F.concat_ws(".", F.slice(labels, start, slen + 1))
+    ).drop("_tp_lb", "_tp_slen")
 
 
 def canonical_url(url: Column) -> Column:
@@ -421,31 +378,28 @@ def host_hash(host: Column) -> Column:
     return F.xxhash64(host)
 
 
-def with_canonical(df, url_col: str = "url", prefix: str = ""):
-    """Attach canonical_url/host/registrable_domain/url_hash/host_hash.
+def with_canonical(df, url_col: str = "url"):
+    """Attach canonical_url/host/url_hash/host_hash.
 
     Staged through intermediate columns so the parse of the raw URL runs
     ONCE — a naive composition re-evaluates the authority extraction per
     derived column, and URL string-scanning is the dominant per-row cost
-    of the frontier pass."""
+    of the frontier pass. No registrable domain: nothing that
+    canonicalizes reads one, and attach_registrable_domain adds it where
+    it is needed."""
     u = F.col(url_col)
     no_frag = F.substring_index(F.trim(u), "#", 1)
     staged = df.withColumn("_nf", no_frag)
     p = _parse_url(F.col("_nf"))
-    staged = staged.withColumn(prefix + "host", p["host"]).withColumn(
-        "_rest", p["rest"]
-    )
+    staged = staged.withColumn("host", p["host"]).withColumn("_rest", p["rest"])
+    host, rest = F.col("host"), F.col("_rest")
     canon = F.when(
-        p["has_scheme"],
-        F.concat(p["scheme"], F.lit("://"), F.col(prefix + "host"), F.col("_rest")),
-    ).otherwise(F.concat(F.col(prefix + "host"), F.col("_rest")))
+        p["has_scheme"], F.concat(p["scheme"], F.lit("://"), host, rest)
+    ).otherwise(F.concat(host, rest))
     staged = (
-        staged.withColumn(prefix + "canonical_url", canon)
-        .withColumn(
-            prefix + "registrable_domain", registrable_domain(F.col(prefix + "host"))
-        )
-        .withColumn(prefix + "url_hash", url_hash(F.col(prefix + "canonical_url")))
-        .withColumn(prefix + "host_hash", host_hash(F.col(prefix + "host")))
+        staged.withColumn("canonical_url", canon)
+        .withColumn("url_hash", url_hash(F.col("canonical_url")))
+        .withColumn("host_hash", host_hash(host))
     )
     return staged.drop("_nf", "_rest")
 

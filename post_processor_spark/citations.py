@@ -48,11 +48,11 @@ def prepare_scope(scope: DataFrame) -> dict[str, DataFrame]:
         "handles_norm",
         F.transform(F.coalesce("twitter_handles", F.array().cast(_EMPTY_STR_ARR)), _handle_norm),
     )
-    # tld structs resolve suffix membership via broadcast-join dims
-    # (canon.attach_tld_parts): nine matcher branches reference them, and
-    # carrying the ~1,700-literal In-lists per branch copy blew
-    # analysis+planning to ~190 s on the golden pipeline (23 MB plan,
-    # 20 MiB task binaries)
+    # tld structs come from canon.attach_tld_parts, whose suffix rule is
+    # a broadcast join against the suffix dims: nine matcher branches
+    # reference them, and the suffix sets as plan literals (one copy per
+    # branch) blew analysis+planning to ~190 s on the golden pipeline
+    # (23 MB plan, 20 MiB task binaries)
     scope_http = attach_tld_parts(
         scope.filter(F.col("source").contains("http")).withColumn(
             "scope_domain", url_host(F.col("source"))

@@ -527,7 +527,7 @@ def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
 
     Constant columns (status/not_before/sched_gen) are attached AFTER the
     dedupe — shuffling them through the min_by aggregation is pure
-    payload; same for registrable_domain, which the frontier never uses."""
+    payload."""
     slim = seed_candidates(seeds)
     return (
         _dedupe_candidates_slim(slim)

@@ -28,13 +28,23 @@ def test_host(spark):
     ]
 
 
+def _registrable(spark, hosts):
+    df = spark.createDataFrame(list(enumerate(hosts)), "i int, h string")
+    out = canon.attach_registrable_domain(df, "h", "reg").orderBy("i")
+    return [r["reg"] for r in out.collect()]
+
+
 def test_registrable_domain(spark):
-    df = spark.createDataFrame(
-        [("www.aljazeera.com",), ("news.bbc.co.uk",), ("bbc.co.uk",), ("com",), ("a.b.c.example.org",)],
-        "h string",
-    )
-    got = [r[0] for r in df.select(canon.registrable_domain(F.col("h"))).collect()]
-    assert got == ["aljazeera.com", "bbc.co.uk", "bbc.co.uk", "com", "example.org"]
+    hosts = [
+        "www.aljazeera.com", "news.bbc.co.uk", "bbc.co.uk", "com",
+        "a.b.c.example.org",
+        # empty labels stay in the slice
+        ".com", "a..b",
+    ]
+    assert _registrable(spark, hosts) == [
+        "aljazeera.com", "bbc.co.uk", "bbc.co.uk", "com", "example.org",
+        ".com", ".b",
+    ]
 
 
 def test_registrable_domain_psl_snapshot(spark):
@@ -57,8 +67,7 @@ def test_registrable_domain_psl_snapshot(spark):
         ("x.anything.mm", "x.anything.mm"),  # wildcard *.mm
         ("plain.example.com", "example.com"),
     ]
-    df = spark.createDataFrame([(h,) for h, _ in cases], "h string")
-    got = [r[0] for r in df.select(canon.registrable_domain(F.col("h"))).collect()]
+    got = _registrable(spark, [h for h, _ in cases])
     assert got == [want for _, want in cases]
 
 
@@ -135,32 +144,38 @@ def test_registrable_domain_icann_expansion(spark):
         ("news.bbc.co.uk", "bbc.co.uk"),
         ("plain.example.com", "example.com"),
     ]
-    df = spark.createDataFrame([(h,) for h, _ in cases], "h string")
-    got = [r[0] for r in df.select(canon.registrable_domain(F.col("h"))).collect()]
+    got = _registrable(spark, [h for h, _ in cases])
     bad = [(h, g, w) for (h, w), g in zip(cases, got) if g != w]
     assert not bad, bad
+
+
+def _tld_parts_equal(spark, a, b):
+    df = spark.createDataFrame([(a, b)], "a string, b string")
+    df = canon.attach_tld_parts(df, "a", "ta")
+    df = canon.attach_tld_parts(df, "b", "tb")
+    return df.select((F.col("ta") == F.col("tb")).alias("eq")).collect()[0]["eq"]
 
 
 def test_tld_parts_equality_matches_reference_skip(spark):
     # self-citation skip compares full tldextract triples
     # (processor_domain.py:43-45): www.aljazeera.com == www.aljazeera.com,
     # but aljazeera.com != www.aljazeera.com
-    df = spark.createDataFrame(
-        [("https://www.aljazeera.com/", "https://www.aljazeera.com/x")],
-        "a string, b string",
-    )
-    row = df.select(
-        (canon.tld_parts(F.col("a")) == canon.tld_parts(F.col("b"))).alias("eq")
-    ).collect()[0]
-    assert row["eq"] is True
-    df2 = spark.createDataFrame(
-        [("https://aljazeera.com/", "https://www.aljazeera.com/")], "a string, b string"
-    )
-    assert (
-        df2.select((canon.tld_parts(F.col("a")) == canon.tld_parts(F.col("b"))).alias("eq"))
-        .collect()[0]["eq"]
-        is False
-    )
+    assert _tld_parts_equal(
+        spark, "https://www.aljazeera.com/", "https://www.aljazeera.com/x"
+    ) is True
+    assert _tld_parts_equal(
+        spark, "https://aljazeera.com/", "https://www.aljazeera.com/"
+    ) is False
+
+
+def test_with_canonical_plan_has_no_suffix_literals(spark):
+    """The crawl path canonicalizes without the public-suffix rule: no
+    suffix-set literal (about 1,500 of them, ~7,000 py4j calls to build)
+    may reach the plan of with_canonical."""
+    df = spark.createDataFrame([("https://www.example.com/a",)], "url string")
+    plan = canon.with_canonical(df)._jdf.queryExecution().optimizedPlan().toString()
+    for literal in ("k12.ca.us", "co.uk", "gob.mx"):
+        assert literal not in plan, literal
 
 
 def test_canonical_url(spark):

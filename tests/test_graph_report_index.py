@@ -136,12 +136,19 @@ def test_host_graph_rollup(spark):
         ("https://a.com/z#frag", "https://sub.b.co.uk/w"),  # www/sub fold
         ("http://a.com/q", "http://www.a.com/self"),        # self edge
         ("https://c.org/1", "https://a.com/2"),
+        # an empty label stays in the registrable domain
+        ("https://a..b/x", "https://c.org/1"),
+        ("https://x..b/y", "https://www.c.org/2"),
+        ("https://.com/z", "https://c.org/3"),
     ]
     out = graph.host_graph(
         spark.createDataFrame(edges, "src string, dst string")
     )
     got = {(r["src_domain"], r["dst_domain"]): r["weight"] for r in out.collect()}
-    assert got == {("a.com", "b.co.uk"): 2, ("c.org", "a.com"): 1}
+    assert got == {
+        ("a.com", "b.co.uk"): 2, ("c.org", "a.com"): 1,
+        (".b", "c.org"): 2, (".com", "c.org"): 1,
+    }
     with_self = graph.host_graph(
         spark.createDataFrame(edges, "src string, dst string"), drop_self=False
     )
