@@ -124,6 +124,7 @@ def build_frontier_state(spark, n_urls: int) -> dict:
         .select("url_hash", "host_hash", F.lit(0).alias("generation"))
         .persist()
     )
+    # seq % 5 == 0 keeps n_urls/5 keys (4M at 20M): bloom_bits(4M) is this default 64 x 1 Mbit
     bloom_df = seen_mod.build_bloom(seen_tbl).persist()
     bloom_df.count()  # force state build (bitmaps stay executor-side)
     exact_idx = seen_mod.build_exact_index(seen_tbl).persist()

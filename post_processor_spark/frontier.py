@@ -30,18 +30,14 @@ Spark-first design:
 
 from __future__ import annotations
 
-import logging
 import time
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import canon
 from .seen import SeenSide, bloom_entry, filter_unseen
-from .state import SnapshotStore
-
-log = logging.getLogger(__name__)
+from .state import SnapshotStore, Write, observed
 
 # fixed, documented epoch for deterministic not_before timestamps
 _BASE_EPOCH = 1_700_000_000  # 2023-11-14T22:13:20Z
@@ -543,31 +539,16 @@ FRONTIER_COLS = [
 ]
 
 
-def _observed(obs: Observation, defaults: dict) -> dict:
-    """Read an Observation's metrics, defaulting when the observed
-    subtree was optimized away.
+def _cached_counts(obs: Observation, frame: DataFrame, aggs: list) -> dict:
+    """The counts `aggs` that `obs` observed below the persist of `frame`.
 
-    Empty-relation propagation may remove a CollectMetrics node whose
-    input is provably empty at runtime (e.g. the scheduled-rows filter
-    in a generation where robots blocked every pending row); the JVM
-    Observation then completes with a schemaless empty row that
-    Observation.get cannot convert (PythonSQLUtils.toPyRow fails its
-    schema assertion). Elimination only happens when the observed input
-    was empty, so each defaulted value must be the observed aggregate's
-    empty-input result (counts/sums → 0). Any other failure propagates."""
-    try:
-        return obs.get
-    except Py4JJavaError as e:
-        if (
-            "toPyRow" not in e.errmsg
-            or e.java_exception.getClass().getName() != "java.lang.AssertionError"
-        ):
-            raise
-        log.info(
-            "observation %s: observed subtree was eliminated as empty;"
-            " using defaults %s", obs._name, defaults,
-        )
-        return defaults
+    The observation completes with the first job whose plan holds it:
+    the job that fills the cache. When that job dropped the cache scan
+    (AQE replaced a subtree above it that it proved empty at runtime,
+    e.g. a generation that discovers nothing), the counts are lost, not
+    zero; they are then taken from the cache by one job."""
+    got = observed(obs, None)
+    return got if got is not None else frame.agg(*aggs).first().asDict()
 
 
 def _pending(fr: DataFrame) -> DataFrame:
@@ -625,7 +606,20 @@ def run_generation(
     expand → dedupe → seen-filter → delta commit. Returns driver-side
     metrics: rows_in, scheduled, discovered, new, blocked, wall_ms (up to
     the commit — the value the metrics row carries, since a row cannot
-    contain its own commit) and commit_ms (the write_many commit).
+    contain its own commit), commit_ms (the write_many commit) and
+    rows_written (table → rows this commit wrote, as the manifest records
+    them; the commit also logs each table's rows and files).
+
+    Every count is known before the commit without a job of its own
+    (save _cached_counts' recount in a generation that discovers
+    nothing): rows_in, blocked, scheduled and discovered are Observations
+    placed below the persists of the scheduler input, the schedule and
+    the discovered rows, so they fire in the seen filter's materialize
+    job that fills those caches; new is that job's count. The metrics
+    rows take them as literals, and the frontier delta (scheduled + new
+    + blocked rows) is written in files sized by its row count
+    (write_many `rows`); a compaction is sized by the recorded frontier
+    rows plus the delta's.
 
     trap_gate: apply canon.is_crawl_trap as an admission filter on
     discovered outlinks, BEFORE the in-batch dedupe and the seen
@@ -690,14 +684,24 @@ def run_generation(
     # norm/big splits) — uncached that's three delta-log re-merges. Head
     # generations never build the merge-on-read pending view at all: the
     # head IS the schedulable set.
+    # rows_in (the scheduler's input, robots-blocked rows included) and
+    # n_blocked are observed BELOW the persist of that input (`gated`
+    # when robots are given, else `pending`), like disc_obs below: they
+    # fire in the materialize job that fills the cache.
+    in_obs = Observation()
+    in_aggs = [F.count(F.lit(1)).alias("n")]
     pending = (
         _pending(frontier) if head_df is None else head_df.select(*FRONTIER_COLS)
-    ).persist()
+    )
+    if robots is None:
+        pending = pending.observe(in_obs, *in_aggs)
+    pending = pending.persist()
 
     gated = blocked = refill = None
     schedulable = pending
     if robots is not None:
-        gated = apply_robots(pending, robots).persist()
+        in_aggs.append(F.count_if(F.col("robots_blocked")).alias("b"))
+        gated = apply_robots(pending, robots).observe(in_obs, *in_aggs).persist()
         blocked = (
             gated.filter(F.col("robots_blocked"))
             .drop("robots_blocked")
@@ -759,11 +763,17 @@ def run_generation(
     # pending/null/null; the merge-on-read view and the head exclude
     # everything else) — dropping them keeps three dead 8-byte slots out
     # of the rank exchange; politeness re-synthesizes them.
-    updated = politeness_schedule(
-        schedulable.drop("status", "not_before", "sched_gen"),
-        generation, budget_per_host, crawl_delay_sec, salt_parts,
-        host_delays=host_delays,
-    ).persist()
+    sched_obs = Observation()
+    sched_agg = F.count_if(F.col("status") == "scheduled").alias("n")
+    updated = (
+        politeness_schedule(
+            schedulable.drop("status", "not_before", "sched_gen"),
+            generation, budget_per_host, crawl_delay_sec, salt_parts,
+            host_delays=host_delays,
+        )
+        .observe(sched_obs, sched_agg)
+        .persist()
+    )
     scheduled = updated.filter(F.col("status") == "scheduled")
     still_pending = updated.filter(F.col("status") == "pending").select(*FRONTIER_COLS)
 
@@ -815,44 +825,24 @@ def run_generation(
     )
     new_rows = new_base.select(*FRONTIER_COLS)
     n_new = new_base.materialized_count
-    # the materialize job above filled the discovered cache and fired
-    # disc_obs — the old follow-up discovered.count() job is free now
-    n_discovered = int(_observed(disc_obs, {"n": 0})["n"])
+    # the materialize job above filled the pending/gated, updated and
+    # discovered caches and so fired their observations: no job runs here
+    n_discovered = int(observed(disc_obs, {"n": 0})["n"])
+    inputs = _cached_counts(in_obs, pending if gated is None else gated, in_aggs)
+    n_rows_in, n_blocked = int(inputs["n"]), int(inputs.get("b", 0))
+    n_scheduled = int(_cached_counts(sched_obs, updated, [sched_agg])["n"])
 
     # Driver-side actions are per-generation FIXED overhead that caps the
-    # headline rate and scaling efficiency, so every remaining count is
-    # folded into the metrics write inside the atomic commit: the
-    # generation loop runs ZERO synchronous driver actions before it.
+    # headline rate and scaling efficiency, so the only count job before
+    # the commit is the seen filter's materialize job, which every later
+    # count rides.
     wall_ms = int((time.time() - t0) * 1000)
-    # rows_in (the scheduler's input, robots-blocked rows included) and
-    # n_blocked: ONE one-row aggregate over the persisted input — `gated`
-    # when robots are given, else `pending` (count(updated) ==
-    # count(pending): politeness returns every input row) — broadcast onto
-    # every metrics row. Its Observation sits on the one-row subtree,
-    # which executes exactly once, in the metrics write.
-    totals_obs = Observation(f"totals_{generation}")
-    n_blocked_col = (
-        F.lit(0) if gated is None
-        else F.coalesce(F.sum(F.col("robots_blocked").cast("long")), F.lit(0))
-    )
-    totals = (pending if gated is None else gated).agg(
-        F.count(F.lit(1)).cast("long").alias("_rows_in"),
-        n_blocked_col.cast("long").alias("_n_blocked"),
-    ).observe(
-        totals_obs, F.max("_rows_in").alias("n"), F.max("_n_blocked").alias("b")
-    )
     # per-partition lineage (A6/north_rule): partition-level scheduled
     # counts as ONE lazy rollup — per-partition rows plus the grand-total
     # row (rollup's null group → partition_id -1) — that rides the
-    # metrics write; n_scheduled reaches the driver through an
-    # Observation on the same job. (Each observed subtree appears exactly
-    # once in exactly one executed plan — a CollectMetrics node must
-    # never be duplicated or re-executed, or the observed count would
-    # double.)
-    sched_obs = Observation(f"sched_gen_{generation}")
+    # metrics write.
     part_metrics = (
-        scheduled.observe(sched_obs, F.count(F.lit(1)).alias("n_scheduled"))
-        .select(F.spark_partition_id().alias("pid"))
+        scheduled.select(F.spark_partition_id().alias("pid"))
         .rollup("pid")
         .agg(F.count("*").alias("n_sched"))
     )
@@ -872,12 +862,11 @@ def run_generation(
         part_metrics.unionByName(fallback)
         .groupBy("pid")
         .agg(F.sum("n_sched").alias("n_sched"))
-        .crossJoin(F.broadcast(totals.select("_rows_in")))
     )
     metrics = part_metrics.select(
         F.lit(generation).cast("int").alias("generation"),
         F.coalesce(F.col("pid"), F.lit(-1)).cast("int").alias("partition_id"),
-        F.col("_rows_in").alias("rows_in"),
+        F.lit(n_rows_in).cast("long").alias("rows_in"),
         F.lit(n_new).cast("long").alias("rows_out"),
         F.col("n_sched").cast("long").alias("scheduled"),
         F.when(F.col("pid").isNull(), F.lit(n_discovered - n_new))
@@ -894,6 +883,7 @@ def run_generation(
     delta = scheduled.withColumn("status", F.lit("done")).select(
         *FRONTIER_COLS
     ).unionByName(new_rows)
+    n_delta = n_scheduled + n_new + n_blocked
     if blocked is not None:
         delta = delta.unionByName(blocked)
     if is_compact:
@@ -902,9 +892,16 @@ def run_generation(
             .unionByName(delta)
             .unionByName(still_pending)
         )
-        frontier_entry = ("frontier", merged, generation, "compact")
+        # sized from an upper bound on the merged rows (still_pending is
+        # part of the recorded frontier); without a record (a store from
+        # before the counts) the write keeps its plan's partitioning
+        n_before = store.rows("frontier")
+        frontier_entry = Write(
+            "frontier", merged, generation, "compact",
+            rows=None if n_before is None else n_before + n_delta,
+        )
     else:
-        frontier_entry = ("frontier", delta, generation, "append")
+        frontier_entry = Write("frontier", delta, generation, "append", rows=n_delta)
     writes = [frontier_entry, ("metrics", metrics, generation, "append")]
     writes += side.admit(new_rows, n_new, generation, reads, is_compact)
     if compact_every:
@@ -917,24 +914,21 @@ def run_generation(
         head_new = top_per_host(still_pending.unionByName(new_rows), cap, salt_parts)
         writes.append(("head", head_new, generation, "snapshot"))
     t_commit = time.time()
-    store.write_many(writes)
+    rows_written = store.write_many(writes)
     commit_ms = int((time.time() - t_commit) * 1000)
-    # the metrics write above executed the observed plans; get() returns
-    # the filled values without launching anything
-    n_scheduled = int(_observed(sched_obs, {"n_scheduled": 0})["n_scheduled"])
-    totals_v = _observed(totals_obs, {"n": 0, "b": 0})
     for h in (updated, pending, discovered, new_base, gated, refill):
         if h is not None:
             h.unpersist()
     return {
         "generation": generation,
-        "rows_in": int(totals_v["n"]),
+        "rows_in": n_rows_in,
         "scheduled": n_scheduled,
         "discovered": n_discovered,
         "new": n_new,
-        "blocked": int(totals_v["b"]),
+        "blocked": n_blocked,
         "wall_ms": wall_ms,
         "commit_ms": commit_ms,
+        "rows_written": rows_written,
     }
 
 
@@ -966,8 +960,11 @@ def bootstrap(
     seen_mode = "bucketed" if seen_layout == "bucketed" else "append"
     store.write_many(
         [
-            ("frontier", fr, 0, "append"),
-            ("seen", fr.select("url_hash", "host_hash", F.lit(0).alias("generation")), 0, seen_mode),
+            Write("frontier", fr, 0, "append", rows=n),
+            Write(
+                "seen", fr.select("url_hash", "host_hash", F.lit(0).alias("generation")),
+                0, seen_mode, rows=n,
+            ),
             bloom_entry(fr.select("url_hash"), n, 0),
         ],
         bucket_specs={"seen": (["url_hash"], seen_buckets)},

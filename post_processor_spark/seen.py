@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .state import Write
+
 # splitmix64-style odd multipliers for double hashing (public-domain
 # constants from the splitmix64 reference implementation)
 _H1_MULT = np.uint64(0xBF58476D1CE4E5B9)
@@ -283,7 +285,8 @@ class SeenSide:
         compact: bool = False,
     ) -> list:
         """write_many entries admitting `new_rows` (url_hash, host_hash),
-        n_new rows (the bloom's key count grows by it).
+        n_new rows (the bloom's key count grows by it, and the seen delta
+        is written in files sized by it).
 
         The seen delta follows the layout bootstrap pinned in the
         manifest (append dirs or the bucketed external table). Every index
@@ -292,11 +295,12 @@ class SeenSide:
         does each table in `reads` (the indexes the caller's seen-filter
         plan merges), through SeenIndexTable's backfill when it is
         missing."""
-        entries = [(
+        entries = [Write(
             "seen",
             new_rows.select("url_hash", "host_hash", F.lit(generation).alias("generation")),
             generation,
             self.store.table_mode("seen") or "append",
+            rows=n_new,
         )]
         new_keys = new_rows.select("url_hash")
         for name, tbl in self.index.items():

@@ -13,11 +13,69 @@ read_from_memory resume (archived/Post-Processor/processor.py:854-866,
 from __future__ import annotations
 
 import json
+import logging
+import math
 import os
 import tempfile
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
+
+# Rows a directory write puts in one parquet file when the write carries
+# its row count: ~40 MB at the 38 bytes of a frontier row.
+ROWS_PER_FILE = 1_000_000
+
+
+def observed(obs: Observation, defaults: dict | None) -> dict | None:
+    """Read an Observation's metrics, or `defaults` when the observed
+    subtree was optimized away.
+
+    AQE's empty-relation propagation may drop a CollectMetrics node from
+    the executed plan when a subtree proves empty at runtime: the
+    node's own input, or — for a node below a persist, whose observation
+    the job that fills the cache completes — a subtree above the cache
+    scan. The JVM Observation then completes with a schemaless empty row
+    that Observation.get cannot convert (PythonSQLUtils.toPyRow fails its
+    schema assertion). Where only the node's own input can be dropped,
+    the defaults are the observed aggregate's empty-input result
+    (counts → 0); elsewhere the caller passes None and recounts. Any
+    other failure propagates."""
+    try:
+        return obs.get
+    except Py4JJavaError as e:
+        if (
+            "toPyRow" not in e.errmsg
+            or e.java_exception.getClass().getName() != "java.lang.AssertionError"
+        ):
+            raise
+        log.info(
+            "observation %s: observed subtree was eliminated as empty;"
+            " using defaults %s", obs._name or "(unnamed)", defaults,
+        )
+        return defaults
+
+
+class Write(NamedTuple):
+    """One write of a write_many commit. A plain (table, df, generation,
+    mode[, meta[, rows]]) tuple is read the same way."""
+
+    table: str
+    df: DataFrame
+    generation: int
+    mode: str
+    meta: dict | None = None
+    rows: int | None = None
+
+
+def _part_files(path: str) -> set[str]:
+    """Names of the parquet part files directly under path."""
+    if not os.path.isdir(path):
+        return set()
+    return {f for f in os.listdir(path) if f.startswith("part-")}
 
 
 class SnapshotStore:
@@ -29,6 +87,11 @@ class SnapshotStore:
     Iceberg bucket(N, col) partition-transform analog — so equi-joins on
     the bucket key skip the exchange on this side; for idempotent
     membership tables like the URL-seen set).
+
+    A directory write that carries its row count is written in
+    ceil(rows / ROWS_PER_FILE) files, and the manifest records the row
+    count of every directory write, observed in the write's own job — so
+    rows(table) knows a table's size without a count job (write_many).
 
     Commit protocol: write a FRESH parquet dir, then atomically replace
     manifest.json (tmp + rename). A crash between the two leaves the
@@ -200,7 +263,7 @@ class SnapshotStore:
         self,
         writes: list[tuple],
         bucket_specs: dict[str, tuple[list[str], int]] | None = None,
-    ) -> None:
+    ) -> dict[str, int]:
         """Multi-table transaction: all parquet dirs are written first,
         then ONE manifest commit makes every table's new version visible
         atomically. A crash mid-way leaves the previous manifest intact —
@@ -208,11 +271,23 @@ class SnapshotStore:
         at g-1 (the cross-table consistency Iceberg transactions give;
         run_generation commits frontier+seen+metrics this way).
 
-        Each write is (table, df, generation, mode), with an optional
-        fifth element: a JSON-able dict that the same manifest commit
-        stores as the table's record (table_meta). A write without one
-        drops the table's record, so no record outlives the data it
-        describes.
+        Each write is a Write: (table, df, generation, mode) with two
+        optional fields. `meta` is a JSON-able dict that the same
+        manifest commit stores as the table's record (table_meta); a
+        write without one drops the table's record, so no record
+        outlives the data it describes. `rows` is the number of rows df
+        holds, when the caller knows it: such a write is coalesced to
+        ceil(rows / ROWS_PER_FILE) partitions, so its files follow its
+        size rather than its plan's partitioning (a bucketed append gets
+        that many files per bucket). coalesce only merges partitions: it
+        adds no shuffle and no job. A write whose last stage is a shuffle
+        is already sized by AQE and needs no count.
+
+        Every write carries an Observation of its row count, which fires
+        in the write's own job. The manifest records it for each
+        directory write (rows()), the commit logs each table's rows and
+        files, and the return value maps each table to the rows this
+        commit wrote.
 
         The per-table writes launch CONCURRENTLY (one thread per table;
         Spark schedules jobs from multiple threads into the same pool):
@@ -230,7 +305,9 @@ class SnapshotStore:
         manifest = self._read_manifest()
         jobs: list = []
         appends: list = []
-        for table, df, generation, mode, *meta in writes:
+        counted: list = []  # (table, generation, observation, dir or None)
+        for w in writes:
+            table, df, generation, mode, meta, rows = Write(*w)
             table_mode = "append" if mode == "compact" else mode
             t = manifest["tables"].setdefault(
                 table, {"current": None, "history": [], "mode": table_mode, "dirs": {}}
@@ -242,8 +319,12 @@ class SnapshotStore:
                     f"table {table!r} is {t['mode']}-mode; cannot {mode}-write"
                 )
             t.pop("meta", None)
-            if meta and meta[0]:
-                t["meta"] = meta[0]
+            if meta:
+                t["meta"] = meta
+            obs = Observation()
+            out = df.observe(obs, F.count(F.lit(1)).alias("n"))
+            if rows is not None:
+                out = out.coalesce(max(1, math.ceil(rows / ROWS_PER_FILE)))
             if mode == "bucketed":
                 # Append into the ONE bucketed external table; visibility is
                 # gated by `gen_col <= current` at read, not by dir refs.
@@ -258,23 +339,26 @@ class SnapshotStore:
                 # at plan time).
                 spec = self._bucketed_spec(t, table, df, bucket_specs)
                 self._ensure_bucketed_registered(df.sparkSession, spec)
-                appends.append(
-                    lambda df=df, spec=spec: (
-                        df.write.format("parquet")
+                appends.append((
+                    spec["location"],
+                    lambda out=out, spec=spec: (
+                        out.write.format("parquet")
                         .bucketBy(spec["n"], *spec["cols"])
                         .sortBy(*spec["cols"])
                         .mode("append")
                         .saveAsTable(spec["name"])
-                    )
-                )
+                    ),
+                ))
+                counted.append((table, generation, obs, None))
                 t["current"] = generation
                 if generation not in t["history"]:
                     t["history"].append(generation)
                 continue
             path = self._new_dir(manifest, table, generation)
             jobs.append(
-                lambda df=df, path=path: df.write.mode("overwrite").parquet(path)
+                lambda out=out, path=path: out.write.mode("overwrite").parquet(path)
             )
+            counted.append((table, generation, obs, path))
             g = str(generation)
             if mode == "snapshot":
                 t["dirs"][g] = [path]  # replaces the reference, not the old dir
@@ -297,9 +381,33 @@ class SnapshotStore:
                 futures = [pool.submit(j) for j in jobs]
                 for f in futures:
                     f.result()  # re-raise the first failure BEFORE commit
-        for append in appends:
+        appended_files = {}
+        for location, append in appends:
+            before = _part_files(location)
             append()
+            appended_files[location] = len(_part_files(location) - before)
+        # the writes above fired every observation: get() launches nothing
+        written: dict[str, int] = {}
+        report = []
+        for table, generation, obs, path in counted:
+            n = int(observed(obs, {"n": 0})["n"])
+            written[table] = written.get(table, 0) + n
+            t = manifest["tables"][table]
+            if path is None:
+                files = appended_files[t["bucketed"]["location"]]
+            else:
+                files = len(_part_files(path))
+                t.setdefault("rows", {})[path] = n
+            report.append(f"{table}@{generation} {n} rows/{files} files")
+        for t in manifest["tables"].values():
+            # records of dereferenced dirs (compaction, snapshot rewrite)
+            # go with their reference
+            if "rows" in t:
+                live = {p for ds in t["dirs"].values() for p in ds}
+                t["rows"] = {p: n for p, n in t["rows"].items() if p in live}
         self._commit_manifest(manifest)
+        log.info("commit %s: %s", self.root, ", ".join(report))
+        return written
 
     def read(
         self, spark: SparkSession, table: str, generation: int | None = None
@@ -318,16 +426,34 @@ class SnapshotStore:
             # catalog scan carries the bucketing, which is what lets the
             # seen-side anti-join skip its exchange
             return spark.table(spec["name"]).filter(F.col(spec["gen_col"]) <= gen)
+        return spark.read.parquet(*self._paths(t, gen))
+
+    @staticmethod
+    def _paths(t: dict, gen: int) -> list[str]:
+        """The dirs a directory-mode table's version `gen` reads."""
         if t.get("mode", "snapshot") == "append":
-            paths = [
+            return [
                 p
                 for g in sorted(t["history"])
                 if g <= gen
                 for p in t["dirs"][str(g)]
             ]
-        else:
-            paths = t["dirs"][str(gen)]
-        return spark.read.parquet(*paths)
+        return t["dirs"][str(gen)]
+
+    def rows(self, table: str) -> int | None:
+        """Rows in the table's current version: the sum of the row counts
+        write_many recorded for the dirs it reads. None — never 0 — when
+        a dir has no record (a store from before the records), when the
+        table has no version, and for bucketed tables (a failed commit
+        can leave appended rows that a later version shows)."""
+        t = self._read_manifest()["tables"].get(table)
+        if t is None or t["current"] is None or t.get("mode") == "bucketed":
+            return None
+        recs = t.get("rows", {})
+        paths = self._paths(t, t["current"])
+        if any(p not in recs for p in paths):
+            return None
+        return sum(recs[p] for p in paths)
 
     def read_or_none(self, spark: SparkSession, table: str) -> DataFrame | None:
         """read() of the current version, or None when the table has no

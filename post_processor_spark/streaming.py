@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from . import frontier
 from .seen import SeenSide
-from .state import SnapshotStore
+from .state import SnapshotStore, Write
 
 SEED_SCHEMA = "url string, priority int, seq long"
 
@@ -61,8 +61,9 @@ def start_frontier_stream(
             # frontier + seen-side tables are delta logs: merging a seed
             # batch is one atomic append of the genuinely-new rows, not a
             # rewrite (SeenSide.admit keeps every seen-side index current)
-            writes = [("frontier", unseen_new, gen_now, "append")]
-            writes += side.admit(unseen_new, unseen_new.count(), gen_now)
+            n_new = unseen_new.count()
+            writes = [Write("frontier", unseen_new, gen_now, "append", rows=n_new)]
+            writes += side.admit(unseen_new, n_new, gen_now)
             # merge the new seeds into the scheduler head cache too — the
             # head must see every pending row that could make a host's
             # top-B before the next full refill (no head yet: the next

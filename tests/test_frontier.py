@@ -1047,3 +1047,103 @@ def test_zero_scheduled_generation_still_writes_summary_metrics(spark):
         assert summary[0]["scheduled"] == 0
         assert summary[0]["rows_in"] == out[1]["rows_in"]
     docs.unpersist()
+
+
+def test_state_dirs_hold_one_file_each_and_split_by_rows(spark, monkeypatch):
+    """Every state write of a small crawl lands in ONE parquet file: the
+    frontier and seen deltas are coalesced from their row counts, and
+    the head, metrics and seen-index writes end in a shuffle AQE sizes.
+    With a small ROWS_PER_FILE, a counted write splits into
+    ceil(rows / ROWS_PER_FILE) files and reads back unchanged."""
+    import math
+
+    from post_processor_spark import state
+
+    docs = fixtures.synthetic_documents(spark, 400, n_hosts=20, seed=17).persist()
+    seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(60)
+    tables = ("frontier", "seen", "metrics", "head", "bloom", "exact_index")
+    with tempfile.TemporaryDirectory() as d:
+        store = SnapshotStore(d)
+        frontier.run_generations(
+            spark, store, docs, seeds, n_generations=3, budget_per_host=4,
+            compact_every=3, exact_join="prebuilt",
+        )
+        manifest = store._read_manifest()["tables"]
+        assert store.generations("frontier") == [3]  # generation 3 compacted
+        for t in tables:
+            dirs = [p for ps in manifest[t]["dirs"].values() for p in ps]
+            assert dirs, t
+            for p in dirs:
+                assert len(state._part_files(p)) == 1, (t, p, state._part_files(p))
+
+        fr = store.read(spark, "frontier")
+        n = fr.count()
+        monkeypatch.setattr(state, "ROWS_PER_FILE", math.ceil(n / 3))
+        store.write_many([state.Write("split", fr.repartition(8), 0, "append", rows=n)])
+        [path] = store._read_manifest()["tables"]["split"]["dirs"]["0"]
+        assert len(state._part_files(path)) == 3
+        back = store.read(spark, "split")
+        assert store.rows("split") == back.count() == n
+        assert back.subtract(fr).count() == 0 and fr.subtract(back).count() == 0
+    docs.unpersist()
+
+
+def test_row_count_records_match_tables(spark, caplog):
+    """SnapshotStore.rows(t) equals the table's row count after bootstrap,
+    a generation, a compaction and a resume — the counts come from the
+    writes' own Observations, with no count job. A store whose manifest
+    lacks the records (written before them) reads None, never 0, and its
+    next compaction still writes the same frontier."""
+    import json
+    import logging
+    import os
+
+    docs = fixtures.synthetic_documents(spark, 300, n_hosts=15, seed=29).persist()
+    seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(40)
+    opts = dict(budget_per_host=4, compact_every=2, exact_join="prebuilt")
+
+    def check(store):
+        for t in store._read_manifest()["tables"]:
+            assert store.rows(t) == store.read(spark, t).count(), t
+
+    with tempfile.TemporaryDirectory() as d1, tempfile.TemporaryDirectory() as d2:
+        store = SnapshotStore(d1)
+        frontier.bootstrap(spark, store, seeds)
+        check(store)
+        with caplog.at_level(logging.INFO, logger="post_processor_spark.state"):
+            g1 = frontier.run_generation(spark, store, docs, 1, **opts)
+        check(store)
+        # one log record per commit, naming each table's rows and files
+        [rec] = [r for r in caplog.records if r.name == "post_processor_spark.state"]
+        for t, n in g1["rows_written"].items():
+            assert f"{t}@1 {n} rows/1 files" in rec.getMessage()
+        assert g1["rows_written"]["frontier"] == g1["scheduled"] + g1["new"]
+        assert g1["rows_written"]["seen"] == g1["new"]
+        frontier.run_generation(spark, store, docs, 2, **opts)  # compacts
+        assert store.generations("frontier") == [2]
+        check(store)
+        frontier.run_generations(
+            spark, store, docs, None, n_generations=1, start_generation=2, **opts
+        )
+        check(store)
+
+        # a store from before the records: the same manifest, stripped
+        with open(os.path.join(d1, "manifest.json")) as f:
+            manifest = json.load(f)
+        for t in manifest["tables"].values():
+            t.pop("rows", None)
+        with open(os.path.join(d2, "manifest.json"), "w") as f:
+            json.dump(manifest, f)
+        legacy = SnapshotStore(d2)
+        assert all(legacy.rows(t) is None for t in manifest["tables"])
+        a = frontier.run_generation(spark, store, docs, 4, **opts)
+        b = frontier.run_generation(spark, legacy, docs, 4, **opts)
+        assert {k: a[k] for k in ("scheduled", "new")} == {
+            k: b[k] for k in ("scheduled", "new")
+        }
+        fa, fb = store.read(spark, "frontier"), legacy.read(spark, "frontier")
+        assert fa.count() == fb.count() == legacy.rows("frontier")
+        assert fa.subtract(fb).count() == 0 and fb.subtract(fa).count() == 0
+        assert legacy.rows("seen") is None  # its old deltas have no record
+        check(store)
+    docs.unpersist()

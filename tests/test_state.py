@@ -270,3 +270,22 @@ def test_bucketed_store_recreated_at_same_root_is_fresh(spark):
         s2 = SnapshotStore(d)
         s2.write_bucketed("seen", _seen_df(spark, 0, 7, 0), 0, n_buckets=4)
         assert s2.read(spark, "seen").count() == 7
+
+
+def test_bucketed_append_sized_by_rows(spark):
+    """A bucketed append that carries its row count writes one file per
+    bucket at this size (ceil(rows / ROWS_PER_FILE) write tasks) instead
+    of one per input partition and bucket; rows() of a bucketed table is
+    None, since a failed commit can leave appended rows visible later."""
+    from post_processor_spark.state import Write, _part_files
+
+    with tempfile.TemporaryDirectory() as d:
+        s = SnapshotStore(d)
+        df = spark.range(200, numPartitions=8).selectExpr("id AS v", "0 AS generation")
+        s.write_many(
+            [Write("b", df, 0, "bucketed", rows=200)], bucket_specs={"b": (["v"], 4)}
+        )
+        loc = s._read_manifest()["tables"]["b"]["bucketed"]["location"]
+        assert len(_part_files(loc)) == 4
+        assert s.read(spark, "b").count() == 200
+        assert s.rows("b") is None
