@@ -14,14 +14,17 @@ Spark-first design:
   reference's insertion-order processing (SURVEY.md §2.6 O3) as a defined
   contract instead of dict-iteration order.
 - politeness: per-host budget B per generation + crawl-delay slots. The
-  top-B-per-host selection is TWO-PHASE to stay balanced under skew
-  (north_rule mega-domain salting): phase 1 ranks within
-  (host, salt=pmod(url_hash, S)) shards and keeps ≤B per shard — any row
-  in the global per-host top-B survives its shard's top-B — phase 2
-  ranks the ≤B*S survivors per host. A mega-host's millions of pending
-  rows are ranked in S balanced shards; only B*S rows reach the final
-  per-host window. The per-generation budget B is the capped token
-  bucket.
+  top-B-per-host selection picks its plan from a row bound the caller
+  already holds (_rank_plan): when no host can hold more rows than the
+  skew threshold it is ONE per-host window. Otherwise it is TWO-PHASE
+  to stay balanced under skew (north_rule mega-domain salting): a host
+  census splits off the hosts over the threshold; phase 1 ranks those
+  within (host, salt=pmod(url_hash, S)) shards and keeps ≤B per shard —
+  any row in the global per-host top-B survives its shard's top-B —
+  phase 2 ranks the ≤B*S survivors per host. A mega-host's millions of
+  pending rows are ranked in S balanced shards; only B*S rows reach the
+  final per-host window. Both plans select the same rows. The
+  per-generation budget B is the capped token bucket.
 - fetch is simulated by joining scheduled URLs back to the documents
   corpus (sandbox has no network; the fetch stage is injectable — S11).
 - not_before timestamps are deterministic: epoch(g) = BASE + g*B*delay,
@@ -30,6 +33,7 @@ Spark-first design:
 
 from __future__ import annotations
 
+import logging
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -38,6 +42,8 @@ from pyspark.sql import functions as F
 from . import canon
 from .seen import SeenSide, bloom_entry, filter_unseen
 from .state import SnapshotStore, Write, observed
+
+log = logging.getLogger(__name__)
 
 # fixed, documented epoch for deterministic not_before timestamps
 _BASE_EPOCH = 1_700_000_000  # 2023-11-14T22:13:20Z
@@ -178,15 +184,43 @@ def _dedupe_candidates_slim(df: DataFrame) -> DataFrame:
     )
 
 
-def _skew_split(
-    df: DataFrame, cap: int, salt_parts: int, skew_threshold: int | None
-) -> tuple[DataFrame, DataFrame]:
-    """(norm, big): rows of hosts with at most / more than skew_threshold
-    rows (default max(cap·S, 4096)), from one cheap hash-agg census. The
-    big branch is the one worth a salted pre-rank: it caps any single sort
-    partition at ~threshold rows."""
+def _rank_plan(
+    where: str,
+    max_host_rows: int | None,
+    cap: int,
+    salt_parts: int,
+    skew_threshold: int | None,
+) -> tuple[str, int]:
+    """(plan, threshold) of the per-host top-`cap` rank `where`, logged
+    once. The skew threshold defaults to max(cap·S, 4096). The plan is
+    'window' (one per-host window) when max_host_rows, an upper bound on
+    the rows any one host holds in the input, is at most the threshold:
+    no host can reach the salted branch, so the census that looks for
+    one is skipped. With no bound (None) it is 'split', the census plan
+    of _skew_split. Both plans select the same rows from any input, so
+    the bound decides only how the rank is balanced."""
     if skew_threshold is None:
         skew_threshold = max(cap * salt_parts, 4096)
+    bounded = max_host_rows is not None and max_host_rows <= skew_threshold
+    plan = "window" if bounded else "split"
+    log.info(
+        "%s: %s plan (at most %s rows a host, skew threshold %d)",
+        where, plan, max_host_rows, skew_threshold,
+    )
+    return plan, skew_threshold
+
+
+def _host_first(df: DataFrame) -> DataFrame:
+    """df with host_hash as its first column: the column order of
+    _skew_split's joins, which the window plan keeps too."""
+    return df.select("host_hash", *[c for c in df.columns if c != "host_hash"])
+
+
+def _skew_split(df: DataFrame, skew_threshold: int) -> tuple[DataFrame, DataFrame]:
+    """(norm, big): rows of hosts with at most / more than skew_threshold
+    rows, from one cheap hash-agg census, host_hash first. The big branch
+    is the one worth a salted pre-rank: it caps any single sort partition
+    at ~threshold rows."""
     big_hosts = F.broadcast(
         df.groupBy("host_hash")
         .count()
@@ -199,6 +233,14 @@ def _skew_split(
     )
 
 
+def _first_per_url(df: DataFrame, *keys) -> DataFrame:
+    """The first row per url_hash in crawl order, by a window partitioned
+    by (keys, url_hash): exact under a repartition on keys, since every
+    duplicate of a url_hash shares its host_hash and its salt shard."""
+    w = Window.partitionBy(*keys, "url_hash").orderBy(*_PACKED_ORDER)
+    return df.withColumn("_dn", F.row_number().over(w)).filter(F.col("_dn") == 1).drop("_dn")
+
+
 def politeness_schedule(
     pending: DataFrame,
     generation: int,
@@ -208,18 +250,25 @@ def politeness_schedule(
     skew_threshold: int | None = None,
     host_delays: DataFrame | None = None,
     dedupe: bool = False,
+    max_host_rows: int | None = None,
 ) -> DataFrame:
     """Tag pending rows: the per-host top-B in crawl order get
     status='scheduled' + a not_before slot; the rest stay 'pending'.
 
-    Skew-adaptive two-phase top-B: hosts with more pending rows than
-    skew_threshold (detected with one cheap hash-agg count) go through a
-    salted pre-rank that caps any single sort partition at ~threshold
-    rows; everyone else gets a single per-host window. Sorting everything
-    twice — the naive always-two-phase plan — costs a full extra sort of
-    the 99% of rows that aren't skewed; always-one-phase serializes the
-    mega-host in one task. The selection is EXACT either way (any global
-    per-host top-B row is in its salt shard's top-B).
+    The plan follows max_host_rows, an upper bound on the rows any one
+    host holds in `pending` (_rank_plan). When it is at most the skew
+    threshold, every row is ranked in ONE per-host window: no host can be
+    skewed, so there is no census, broadcast or salted branch. Without a
+    bound (None, the default) the plan is skew-adaptive two-phase top-B:
+    hosts with more pending rows than skew_threshold (detected with one
+    cheap hash-agg count) go through a salted pre-rank that caps any
+    single sort partition at ~threshold rows; everyone else gets a single
+    per-host window. Sorting everything twice — the naive
+    always-two-phase plan — costs a full extra sort of the 99% of rows
+    that aren't skewed; always-one-phase serializes the mega-host in one
+    task. The selection is EXACT either way (any global per-host top-B
+    row is in its salt shard's top-B), and both plans return the same
+    rows in the same column order.
 
     Each branch is ranked SEPARATELY (a host lives entirely in one
     branch, so per-branch windows see every row of their hosts): ranking
@@ -240,8 +289,15 @@ def politeness_schedule(
     (implicitly all-pending, e.g. a fresh seed list); they are
     synthesized in the output either way.
 
-    Returns the full frame with updated status/not_before/sched_gen."""
+    Returns the full frame with updated status/not_before/sched_gen. Its
+    `rank_plan` attribute names the plan taken; its `persisted` attribute
+    lists the frames the split plan persisted (empty for the window
+    plan), which the caller unpersists after its last action on the
+    result."""
     has_status = "status" in pending.columns
+    plan, threshold = _rank_plan(
+        "politeness_schedule", max_host_rows, budget_per_host, salt_parts, skew_threshold
+    )
 
     # Slim exchange: url/host ride as NULL whenever recoverable from
     # canonical_url (_slim_encode, idempotent) and are re-derived AFTER
@@ -255,39 +311,33 @@ def politeness_schedule(
     # pack (priority, generation) into one rank long for the sort +
     # exchange; unpacked after the windows (exact — see _pack_order)
     pending = _pack_order(pending)
-    norm, big = _skew_split(pending, budget_per_host, salt_parts, skew_threshold)
 
     w_host = Window.partitionBy("host_hash").orderBy(*_PACKED_ORDER)
     salt = F.pmod(F.col("url_hash"), F.lit(salt_parts))
     w_shard = Window.partitionBy("host_hash", salt).orderBy(*_PACKED_ORDER)
 
+    if plan == "window":
+        norm, big = _host_first(pending), None
+    else:
+        norm, big = _skew_split(pending, threshold)
     if dedupe:
         # explicit repartition so the dedupe window (whose partition spec
         # is a SUPERSET of the repartition keys — satisfied without a new
         # exchange) and the rank window share one exchange per branch
-        norm = norm.repartition("host_hash")
-        w_d = Window.partitionBy("host_hash", "url_hash").orderBy(*_PACKED_ORDER)
-        norm = (
-            norm.withColumn("_dn", F.row_number().over(w_d))
-            .filter(F.col("_dn") == 1)
-            .drop("_dn")
-        )
-        big = big.repartition(F.col("host_hash"), salt)
-        w_ds = Window.partitionBy("host_hash", salt, "url_hash").orderBy(*_PACKED_ORDER)
-        big = (
-            big.withColumn("_dn", F.row_number().over(w_ds))
-            .filter(F.col("_dn") == 1)
-            .drop("_dn")
-        )
+        norm = _first_per_url(norm.repartition("host_hash"), "host_hash")
+        if big is not None:
+            big = _first_per_url(big.repartition(F.col("host_hash"), salt), "host_hash", salt)
 
-    # skewed hosts: shard pre-rank (persisted — feeds survivors + overflow)
-    pre = big.withColumn("_shard_rn", F.row_number().over(w_shard)).persist()
-    survivors = pre.filter(F.col("_shard_rn") <= budget_per_host).drop("_shard_rn")
-    shard_overflow = pre.filter(F.col("_shard_rn") > budget_per_host).drop("_shard_rn")
-
-    ranked = norm.withColumn("_rn", F.row_number().over(w_host)).unionByName(
-        survivors.withColumn("_rn", F.row_number().over(w_host))
-    )
+    ranked = norm.withColumn("_rn", F.row_number().over(w_host))
+    persisted = []
+    shard_overflow = None
+    if big is not None:
+        # skewed hosts: shard pre-rank (persisted — feeds survivors + overflow)
+        pre = big.withColumn("_shard_rn", F.row_number().over(w_shard)).persist()
+        persisted.append(pre)
+        survivors = pre.filter(F.col("_shard_rn") <= budget_per_host).drop("_shard_rn")
+        shard_overflow = pre.filter(F.col("_shard_rn") > budget_per_host).drop("_shard_rn")
+        ranked = ranked.unionByName(survivors.withColumn("_rn", F.row_number().over(w_host)))
     # per-host crawl-delay override (north_rule: robots crawl-delay):
     # host_delays(host_hash, crawl_delay_sec) — broadcast; default global
     if host_delays is not None:
@@ -316,7 +366,7 @@ def politeness_schedule(
     prev_not_before = (
         F.col("not_before") if has_status else F.lit(None).cast("timestamp")
     )
-    decided = (
+    out = (
         ranked.withColumn(
             "status", F.when(is_sched, F.lit("scheduled")).otherwise(prev_status)
         )
@@ -333,14 +383,14 @@ def politeness_schedule(
         )
         .drop("_rn", *(["_hd"] if host_delays is not None else []))
     )
-    overflow = shard_overflow
-    if not has_status:
-        overflow = (
-            overflow.withColumn("status", F.lit("pending"))
-            .withColumn("sched_gen", F.lit(None).cast("int"))
-            .withColumn("not_before", F.lit(None).cast("timestamp"))
-        )
-    out = decided.unionByName(overflow.select(*decided.columns))
+    if shard_overflow is not None:
+        if not has_status:
+            shard_overflow = (
+                shard_overflow.withColumn("status", F.lit("pending"))
+                .withColumn("sched_gen", F.lit(None).cast("int"))
+                .withColumn("not_before", F.lit(None).cast("timestamp"))
+            )
+        out = out.unionByName(shard_overflow.select(*out.columns))
     # decode the slim exchange (post-shuffle, narrow)
     out = out.withColumn(
         "url", F.coalesce(F.col("url"), F.col("canonical_url"))
@@ -348,7 +398,9 @@ def politeness_schedule(
         "host",
         F.coalesce(F.col("host"), _host_from_canonical(F.col("canonical_url"))),
     )
-    return _unpack_order(out)
+    out = _unpack_order(out)
+    out.rank_plan, out.persisted = plan, persisted
+    return out
 
 
 def top_per_host(
@@ -356,26 +408,35 @@ def top_per_host(
     cap: int,
     salt_parts: int = 16,
     skew_threshold: int | None = None,
+    max_host_rows: int | None = None,
 ) -> DataFrame:
-    """EXACT top-`cap` rows per host in crawl order, skew-adaptively (the
-    same two-phase salted pattern as politeness_schedule: shard pre-rank
-    caps any single sort partition, global rank finalizes ≤cap*S rows).
-    Used to maintain the scheduler head cache."""
-    norm, big = _skew_split(_pack_order(df), cap, salt_parts, skew_threshold)
-    salt = F.pmod(F.col("url_hash"), F.lit(salt_parts))
-    w_shard = Window.partitionBy("host_hash", salt).orderBy(*_PACKED_ORDER)
-    survivors = (
-        big.withColumn("_srn", F.row_number().over(w_shard))
-        .filter(F.col("_srn") <= cap)
-        .drop("_srn")
-    )
+    """EXACT top-`cap` rows per host in crawl order. Used to maintain the
+    scheduler head cache. The plan follows max_host_rows as in
+    politeness_schedule (_rank_plan): one per-host window when no host can
+    pass the skew threshold; without a bound, the same skew-adaptive
+    two-phase salted pattern (shard pre-rank caps any single sort
+    partition, global rank finalizes ≤cap*S rows). The result's
+    `rank_plan` attribute names the plan taken."""
+    plan, threshold = _rank_plan("top_per_host", max_host_rows, cap, salt_parts, skew_threshold)
+    ranked = _host_first(_pack_order(df))
+    if plan == "split":
+        norm, big = _skew_split(ranked, threshold)
+        salt = F.pmod(F.col("url_hash"), F.lit(salt_parts))
+        w_shard = Window.partitionBy("host_hash", salt).orderBy(*_PACKED_ORDER)
+        survivors = (
+            big.withColumn("_srn", F.row_number().over(w_shard))
+            .filter(F.col("_srn") <= cap)
+            .drop("_srn")
+        )
+        ranked = norm.unionByName(survivors)
     w_host = Window.partitionBy("host_hash").orderBy(*_PACKED_ORDER)
-    return _unpack_order(
-        norm.unionByName(survivors)
-        .withColumn("_rn", F.row_number().over(w_host))
+    out = _unpack_order(
+        ranked.withColumn("_rn", F.row_number().over(w_host))
         .filter(F.col("_rn") <= cap)
         .drop("_rn")
     )
+    out.rank_plan = plan
+    return out
 
 
 def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
@@ -606,9 +667,20 @@ def run_generation(
     expand → dedupe → seen-filter → delta commit. Returns driver-side
     metrics: rows_in, scheduled, discovered, new, blocked, wall_ms (up to
     the commit — the value the metrics row carries, since a row cannot
-    contain its own commit), commit_ms (the write_many commit) and
+    contain its own commit), commit_ms (the write_many commit),
     rows_written (table → rows this commit wrote, as the manifest records
-    them; the commit also logs each table's rows and files).
+    them; the commit also logs each table's rows and files) and
+    rank_plans (ranking → 'window' or 'split', see _rank_plan: 'schedule',
+    'head' for the head write when the head cache is on, and 'refill'
+    when the robots head refill ran).
+
+    Each ranking's plan comes from a per-host row bound the generation
+    already holds, at no job cost: head_cap for a head generation's
+    scheduler input (the head and the robots refill are both top-head_cap
+    per host); the frontier's recorded rows (SnapshotStore.rows, None
+    without a record) for a full rank and the refill; the scheduler
+    input's rows (head_cap on a head generation) plus the new rows for
+    the head write.
 
     Every count is known before the commit without a job of its own
     (save _cached_counts' recount in a generation that discovers
@@ -680,10 +752,16 @@ def run_generation(
         store.read_or_none(spark, "head")
         if compact_every and not is_compact else None
     )
-    # persist: politeness consumes pending three times (skew census +
-    # norm/big splits) — uncached that's three delta-log re-merges. Head
-    # generations never build the merge-on-read pending view at all: the
-    # head IS the schedulable set.
+    # recorded frontier rows: a bound on any host's pending rows (full
+    # rank, refill) and the size of a compaction; None without a record
+    n_frontier = store.rows("frontier")
+    # the most rows any one host can bring to the scheduler
+    sched_bound = n_frontier if head_df is None else cap
+    rank_plans = {}
+    # persist: politeness's split plan consumes pending three times (skew
+    # census + norm/big splits) — uncached that's three delta-log
+    # re-merges. Head generations never build the merge-on-read pending
+    # view at all: the head IS the schedulable set.
     # rows_in (the scheduler's input, robots-blocked rows included) and
     # n_blocked are observed BELOW the persist of that input (`gated`
     # when robots are given, else `pending`), like disc_obs below: they
@@ -744,7 +822,10 @@ def run_generation(
                 .filter(~F.col("robots_blocked"))
                 .drop("robots_blocked")
             )
-            refreshed = top_per_host(affected.select(*FRONTIER_COLS), cap, salt_parts)
+            refreshed = top_per_host(
+                affected.select(*FRONTIER_COLS), cap, salt_parts, max_host_rows=n_frontier
+            )
+            rank_plans["refill"] = refreshed.rank_plan
             refill = (
                 schedulable.join(blocked_hosts, "host_hash", "left_anti")
                 .unionByName(refreshed.select(*schedulable.columns))
@@ -765,15 +846,13 @@ def run_generation(
     # of the rank exchange; politeness re-synthesizes them.
     sched_obs = Observation()
     sched_agg = F.count_if(F.col("status") == "scheduled").alias("n")
-    updated = (
-        politeness_schedule(
-            schedulable.drop("status", "not_before", "sched_gen"),
-            generation, budget_per_host, crawl_delay_sec, salt_parts,
-            host_delays=host_delays,
-        )
-        .observe(sched_obs, sched_agg)
-        .persist()
+    ranked = politeness_schedule(
+        schedulable.drop("status", "not_before", "sched_gen"),
+        generation, budget_per_host, crawl_delay_sec, salt_parts,
+        host_delays=host_delays, max_host_rows=sched_bound,
     )
+    rank_plans["schedule"] = ranked.rank_plan
+    updated = ranked.observe(sched_obs, sched_agg).persist()
     scheduled = updated.filter(F.col("status") == "scheduled")
     still_pending = updated.filter(F.col("status") == "pending").select(*FRONTIER_COLS)
 
@@ -895,10 +974,9 @@ def run_generation(
         # sized from an upper bound on the merged rows (still_pending is
         # part of the recorded frontier); without a record (a store from
         # before the counts) the write keeps its plan's partitioning
-        n_before = store.rows("frontier")
         frontier_entry = Write(
             "frontier", merged, generation, "compact",
-            rows=None if n_before is None else n_before + n_delta,
+            rows=None if n_frontier is None else n_frontier + n_delta,
         )
     else:
         frontier_entry = Write("frontier", delta, generation, "append", rows=n_delta)
@@ -910,13 +988,19 @@ def run_generation(
         # the old head (cost O(head+new)); on a refill/compaction
         # generation it was the full pending view, so this IS the exact
         # refill. Demoted rows need no write — they already sit in the
-        # frontier delta log as pending.
-        head_new = top_per_host(still_pending.unionByName(new_rows), cap, salt_parts)
+        # frontier delta log as pending. A host's unscheduled input rows
+        # are at most its scheduler input rows: head_cap on a head
+        # generation, else at most every input row.
+        head_bound = (n_rows_in if head_df is None else cap) + n_new
+        head_new = top_per_host(
+            still_pending.unionByName(new_rows), cap, salt_parts, max_host_rows=head_bound
+        )
+        rank_plans["head"] = head_new.rank_plan
         writes.append(("head", head_new, generation, "snapshot"))
     t_commit = time.time()
     rows_written = store.write_many(writes)
     commit_ms = int((time.time() - t_commit) * 1000)
-    for h in (updated, pending, discovered, new_base, gated, refill):
+    for h in (updated, pending, discovered, new_base, gated, refill, *ranked.persisted):
         if h is not None:
             h.unpersist()
     return {
@@ -929,6 +1013,7 @@ def run_generation(
         "wall_ms": wall_ms,
         "commit_ms": commit_ms,
         "rows_written": rows_written,
+        "rank_plans": rank_plans,
     }
 
 

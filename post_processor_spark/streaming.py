@@ -67,12 +67,14 @@ def start_frontier_stream(
             # merge the new seeds into the scheduler head cache too — the
             # head must see every pending row that could make a host's
             # top-B before the next full refill (no head yet: the next
-            # generation builds it from pending)
+            # generation builds it from pending). A host holds at most
+            # head_cap head rows plus the batch's new ones.
             head = store.read_or_none(spark, "head")
             if head is not None:
+                cap = frontier.head_cap(**sched_kwargs)
                 merged = frontier.top_per_host(
                     head.select(*frontier.FRONTIER_COLS).unionByName(unseen_new),
-                    frontier.head_cap(**sched_kwargs),
+                    cap, max_host_rows=cap + n_new,
                 )
                 writes.append(("head", merged, gen_now, "snapshot"))
             store.write_many(writes)

@@ -1007,14 +1007,17 @@ def test_generation_job_count_constant_in_g(spark):
             spark, store, docs, seeds, n_generations=4, budget_per_host=4,
             compact_every=4, use_bloom=True, exact_join="prebuilt",
         )
-        counts = []
+        counts, plans = [], []
         for g in (5, 6):
             j0 = job_count()
-            frontier.run_generation(
+            r = frontier.run_generation(
                 spark, store, docs, g, budget_per_host=4, compact_every=4,
                 use_bloom=True, exact_join="prebuilt",
             )
             counts.append(job_count() - j0)
+            plans.append(r["rank_plans"])
+        # like with like: both generations rank in the same plans
+        assert plans[0] == plans[1] == {"schedule": "window", "head": "window"}, plans
         assert counts[1] <= counts[0], counts
     docs.unpersist()
 
@@ -1146,4 +1149,112 @@ def test_row_count_records_match_tables(spark, caplog):
         assert fa.subtract(fb).count() == 0 and fb.subtract(fa).count() == 0
         assert legacy.rows("seen") is None  # its old deltas have no record
         check(store)
+    docs.unpersist()
+
+
+def _skewed_pending(spark):
+    """A mega-host seed frontier (one host holds about half the rows),
+    checkpointed so plans start at a scan; with its largest host's rows."""
+    base = fixtures.synthetic_seed_frontier(
+        spark, 2000, n_hosts=10, mega_host_share=0.5, seed=7
+    )
+    pending = frontier.seeds_to_frontier(base).localCheckpoint()
+    most = pending.groupBy("host_hash").count().agg(F.max("count")).first()[0]
+    return pending, most
+
+
+def test_rank_plans_select_the_same_rows(spark):
+    """With a per-host row bound under the skew threshold, politeness
+    (plain and with fused dedupe) and top_per_host rank in one window; with
+    no bound they take the census plan. Both return the same rows in the
+    same column order. A bound over the threshold still takes the split,
+    here with a non-empty salted branch (threshold 64 < the mega-host)."""
+    pending, most = _skewed_pending(spark)
+    dup = pending.withColumn("seq", F.col("seq") + 100_000).filter(F.col("seq") % 3 == 0)
+
+    def outputs(bound, threshold=None):
+        opts = dict(salt_parts=4, skew_threshold=threshold, max_host_rows=bound)
+        return {
+            "schedule": frontier.politeness_schedule(
+                pending, 1, budget_per_host=4, **opts),
+            "fused": frontier.politeness_schedule(
+                pending.unionByName(dup), 1, budget_per_host=4, dedupe=True, **opts),
+            "head": frontier.top_per_host(pending, 12, **opts),
+        }
+
+    window, split, salted = outputs(most), outputs(None), outputs(most, threshold=64)
+    for name, w in window.items():
+        assert (w.rank_plan, split[name].rank_plan, salted[name].rank_plan) == (
+            "window", "split", "split"), name
+        rows = sorted(tuple(r) for r in w.collect())
+        assert rows, name
+        for other in (split[name], salted[name]):
+            assert other.columns == w.columns, name
+            assert sorted(tuple(r) for r in other.collect()) == rows, name
+    for out in (*split.values(), *salted.values()):
+        for df in getattr(out, "persisted", []):
+            df.unpersist()
+
+
+def test_rank_plan_pins(spark):
+    """The window plan has no host census: no aggregate, broadcast or
+    semi-join in its physical plan. Without a bound the census plan keeps
+    all three."""
+    pending, most = _skewed_pending(spark)
+    for bound, want in ((most, False), (None, True)):
+        sched = frontier.politeness_schedule(
+            pending, 1, budget_per_host=4, salt_parts=4, max_host_rows=bound)
+        head = frontier.top_per_host(pending, 12, salt_parts=4, max_host_rows=bound)
+        for out in (sched, head):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            census = ("HashAggregate", "BroadcastExchange", "LeftSemi")
+            assert [n in plan for n in census] == [want] * 3, (bound, plan)
+
+
+def test_generation_leaves_cache_as_found(spark, caplog):
+    """run_generation releases every frame it persists, the split plan's
+    shard pre-rank included, in both regimes. The window regime is a
+    store whose manifest records its rows; the split regime is the same
+    store without the records (a store from before them, rows unknown).
+    Each ranking's plan is logged and returned in rank_plans."""
+    import json
+    import logging
+    import os
+    import shutil
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+
+    def entries():
+        return field.get(cm).size()
+
+    docs = fixtures.synthetic_documents(spark, 300, n_hosts=15, seed=29).persist()
+    seeds = docs.select("url", F.lit(1).alias("priority"), F.col("seq")).limit(40)
+    opts = dict(budget_per_host=4, compact_every=2, exact_join="prebuilt")
+    with tempfile.TemporaryDirectory() as d1, tempfile.TemporaryDirectory() as d2:
+        store = SnapshotStore(d1)
+        frontier.bootstrap(spark, store, seeds)
+        shutil.rmtree(d2)
+        shutil.copytree(d1, d2)
+        with open(os.path.join(d2, "manifest.json")) as f:
+            manifest = json.load(f)
+        for t in manifest["tables"].values():
+            t.pop("rows", None)
+        with open(os.path.join(d2, "manifest.json"), "w") as f:
+            json.dump(manifest, f)
+        results = {}
+        for regime, s in (("window", store), ("split", SnapshotStore(d2))):
+            before = entries()
+            caplog.clear()
+            with caplog.at_level(logging.INFO, logger="post_processor_spark.frontier"):
+                results[regime] = frontier.run_generation(spark, s, docs, 1, **opts)
+            assert entries() == before, regime
+            assert results[regime]["rank_plans"] == {"schedule": regime, "head": "window"}
+            msgs = [r.getMessage() for r in caplog.records
+                    if r.name == "post_processor_spark.frontier"]
+            assert len(msgs) == 2 and all("skew threshold 4096" in m for m in msgs), msgs
+            assert f"politeness_schedule: {regime} plan" in msgs[0], msgs
+        keep = ("scheduled", "discovered", "new", "rows_written")
+        assert [results["window"][k] for k in keep] == [results["split"][k] for k in keep]
     docs.unpersist()
