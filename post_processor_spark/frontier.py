@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import canon
-from .seen import SeenSide, bloom_entry, filter_unseen
+from .seen import SeenSide
 from .state import SnapshotStore, Write, observed
 
 log = logging.getLogger(__name__)
@@ -686,12 +686,12 @@ def run_generation(
     (save _cached_counts' recount in a generation that discovers
     nothing): rows_in, blocked, scheduled and discovered are Observations
     placed below the persists of the scheduler input, the schedule and
-    the discovered rows, so they fire in the seen filter's materialize
-    job that fills those caches; new is that job's count. The metrics
-    rows take them as literals, and the frontier delta (scheduled + new
-    + blocked rows) is written in files sized by its row count
-    (write_many `rows`); a compaction is sized by the recorded frontier
-    rows plus the delta's.
+    the seen filter's result, so they fire in the seen filter's
+    materialize job that fills those caches; new is that job's count.
+    The metrics summary row takes them as literals, and the frontier
+    delta (scheduled + new + blocked rows) is written in files sized by
+    its row count (write_many `rows`); a compaction is sized by the
+    recorded frontier rows plus the delta's.
 
     trap_gate: apply canon.is_crawl_trap as an admission filter on
     discovered outlinks, BEFORE the in-batch dedupe and the seen
@@ -712,8 +712,9 @@ def run_generation(
     The frontier commit is a DELTA (finished + newly discovered rows),
     cost ∝ scheduled+new instead of O(frontier); every `compact_every`
     generations the merged state is compacted into one dir so the
-    read-side delta union and done-key anti-join stay bounded. Newly
-    admitted URLs reach the seen side through seen.SeenSide.admit.
+    read-side delta union and done-key anti-join stay bounded. The seen
+    side (seen.SeenSide) runs the seen filter — merging the index tables
+    its plan reads — and admits the new URLs.
 
     Head cache, active whenever compact_every > 0: schedule from a
     generation-carried HEAD table — per host the top head_cap = K·B
@@ -735,15 +736,6 @@ def run_generation(
     t0 = time.time()
     frontier = store.read(spark, "frontier").select(*FRONTIER_COLS)
     side = SeenSide(spark, store)
-    # the seen-side indexes this generation's filter plan reads:
-    # incrementally maintained delta logs, merged at read (see
-    # SeenIndexTable). A missing one is None, and the filter builds it
-    # from the seen table directly — the same one-time O(|seen|) cost its
-    # backfill pays in this generation's commit.
-    reads = (("bloom",) if use_bloom else ()) + (
-        ("exact_index",) if exact_join == "prebuilt" else ()
-    )
-    merged_index = {t: side.index[t].merged() for t in reads}
 
     is_compact = bool(compact_every) and generation % compact_every == 0
     cap = head_cap(budget_per_host, compact_every)
@@ -764,8 +756,8 @@ def run_generation(
     # view at all: the head IS the schedulable set.
     # rows_in (the scheduler's input, robots-blocked rows included) and
     # n_blocked are observed BELOW the persist of that input (`gated`
-    # when robots are given, else `pending`), like disc_obs below: they
-    # fire in the materialize job that fills the cache.
+    # when robots are given, else `pending`): they fire in the
+    # materialize job that fills the cache.
     in_obs = Observation()
     in_aggs = [F.count(F.lit(1)).alias("n")]
     pending = (
@@ -890,22 +882,15 @@ def run_generation(
         .withColumn("not_before", F.lit(None).cast("timestamp"))
         .withColumn("sched_gen", F.lit(None).cast("int"))
         .select(*FRONTIER_COLS)
-        # observed BELOW the persist: the CollectMetrics node is part of
-        # the cached plan, so it executes exactly once — in the
-        # materialize job that fills this cache — and cache-hit readers
-        # scan the InMemoryRelation without re-firing it
+        # the seen filter is the only reader: its materialize job runs
+        # this CollectMetrics node once, below the persist of its result
         .observe(disc_obs, F.count(F.lit(1)).alias("n"))
-        .persist()
     )
-    new_base = filter_unseen(
-        discovered, side.seen, use_bloom=use_bloom, materialize=True,
-        bloom=merged_index.get("bloom"), exact_join=exact_join,
-        exact_index=merged_index.get("exact_index"),
-    )
+    new_base = side.unseen(discovered, use_bloom, exact_join)
     new_rows = new_base.select(*FRONTIER_COLS)
     n_new = new_base.materialized_count
     # the materialize job above filled the pending/gated, updated and
-    # discovered caches and so fired their observations: no job runs here
+    # seen-filter caches and so fired their observations: no job runs here
     n_discovered = int(observed(disc_obs, {"n": 0})["n"])
     inputs = _cached_counts(in_obs, pending if gated is None else gated, in_aggs)
     n_rows_in, n_blocked = int(inputs["n"]), int(inputs.get("b", 0))
@@ -916,40 +901,22 @@ def run_generation(
     # the commit is the seen filter's materialize job, which every later
     # count rides.
     wall_ms = int((time.time() - t0) * 1000)
-    # per-partition lineage (A6/north_rule): partition-level scheduled
-    # counts as ONE lazy rollup — per-partition rows plus the grand-total
-    # row (rollup's null group → partition_id -1) — that rides the
-    # metrics write.
-    part_metrics = (
-        scheduled.select(F.spark_partition_id().alias("pid"))
-        .rollup("pid")
-        .agg(F.count("*").alias("n_sched"))
+    # per-partition lineage (A6/north_rule): one lazy aggregate of the
+    # scheduled rows' partition ids that rides the metrics write, plus
+    # the summary row (partition_id -1) from the counts already known —
+    # written even when nothing was scheduled. coalesce(1): the rows
+    # (at most partitions + 1) land in one file, not one per union side.
+    per_part = scheduled.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+        F.count(F.lit(1)).alias("scheduled"), F.lit(0).cast("long").alias("filtered_seen")
     )
-    # A grouping-set aggregation over EMPTY input emits no rows at all —
-    # without the fallback a generation that scheduled nothing (e.g.
-    # robots blocked every head row) would write no metrics rows, losing
-    # the always-present partition_id=-1 summary row. Union a literal
-    # zero row and sum-merge by pid: per-partition rows pass through
-    # untouched, the null-pid fallback folds into the rollup's grand
-    # total when one exists (total + 0) and BECOMES the summary row when
-    # the rollup was empty. Tiny aggregate (≤ partitions+2 rows).
-    fallback = spark.range(1).select(
-        F.lit(None).cast("int").alias("pid"),
-        F.lit(0).cast("long").alias("n_sched"),
+    summary = spark.range(1).select(
+        F.lit(-1).alias("partition_id"), F.lit(n_scheduled).cast("long").alias("scheduled"),
+        F.lit(n_discovered - n_new).cast("long").alias("filtered_seen"),
     )
-    part_metrics = (
-        part_metrics.unionByName(fallback)
-        .groupBy("pid")
-        .agg(F.sum("n_sched").alias("n_sched"))
-    )
-    metrics = part_metrics.select(
-        F.lit(generation).cast("int").alias("generation"),
-        F.coalesce(F.col("pid"), F.lit(-1)).cast("int").alias("partition_id"),
+    metrics = per_part.unionByName(summary).coalesce(1).select(
+        F.lit(generation).cast("int").alias("generation"), "partition_id",
         F.lit(n_rows_in).cast("long").alias("rows_in"),
-        F.lit(n_new).cast("long").alias("rows_out"),
-        F.col("n_sched").cast("long").alias("scheduled"),
-        F.when(F.col("pid").isNull(), F.lit(n_discovered - n_new))
-        .otherwise(F.lit(0)).cast("long").alias("filtered_seen"),
+        F.lit(n_new).cast("long").alias("rows_out"), "scheduled", "filtered_seen",
         F.lit(wall_ms).cast("long").alias("wall_ms"),
     )
     # ONE atomic commit for every table: a crash mid-generation must
@@ -981,7 +948,7 @@ def run_generation(
     else:
         frontier_entry = Write("frontier", delta, generation, "append", rows=n_delta)
     writes = [frontier_entry, ("metrics", metrics, generation, "append")]
-    writes += side.admit(new_rows, n_new, generation, reads, is_compact)
+    writes += side.admit(new_rows, n_new, generation, is_compact)
     if compact_every:
         # head' = top-K·B per host of (this generation's unscheduled
         # input ∪ new discoveries). On a head generation the input was
@@ -1000,7 +967,7 @@ def run_generation(
     t_commit = time.time()
     rows_written = store.write_many(writes)
     commit_ms = int((time.time() - t_commit) * 1000)
-    for h in (updated, pending, discovered, new_base, gated, refill, *ranked.persisted):
+    for h in (updated, pending, new_base, gated, refill, *ranked.persisted):
         if h is not None:
             h.unpersist()
     return {
@@ -1017,6 +984,42 @@ def run_generation(
     }
 
 
+def admit_seeds(
+    spark: SparkSession,
+    store: SnapshotStore,
+    seeds: DataFrame,
+    generation: int,
+    cap: int,
+    seen_layout: str = "append",
+    seen_buckets: int = 32,
+) -> int:
+    """Admit seed URLs (url, priority, seq) at `generation` in one atomic
+    commit; returns how many were new. The unseen seeds (all of them on a
+    fresh store) go to the frontier as pending rows, to the seen side
+    (seen.SeenSide.admit) and into the head cache when the store has one
+    — the head must see every pending row that could make a host's top-B
+    before the next full refill. `cap` is head_cap of the run's options.
+    seen_layout/seen_buckets lay out a fresh store's seen table (see
+    bootstrap)."""
+    side = SeenSide(spark, store, seen_layout)
+    new = side.unseen(seeds_to_frontier(seeds).select(*FRONTIER_COLS), use_bloom=False)
+    n_new = new.materialized_count
+    writes = [Write("frontier", new, generation, "append", rows=n_new)]
+    writes += side.admit(new, n_new, generation)
+    head = store.read_or_none(spark, "head")
+    if head is not None:
+        merged = top_per_host(
+            head.select(*FRONTIER_COLS).unionByName(new), cap, max_host_rows=cap + n_new
+        )
+        writes.append(("head", merged, generation, "snapshot"))
+    store.write_many(
+        writes,
+        bucket_specs=None if side.seen is not None else {"seen": (["url_hash"], seen_buckets)},
+    )
+    new.unpersist()
+    return n_new
+
+
 def bootstrap(
     spark: SparkSession,
     store: SnapshotStore,
@@ -1024,7 +1027,8 @@ def bootstrap(
     seen_layout: str = "append",
     seen_buckets: int = 32,
 ) -> dict:
-    """Generation 0: seed the frontier + seen set.
+    """Generation 0: seed a fresh store's frontier and seen side
+    (admit_seeds; the bloom is sized for twice the seeded URLs).
 
     seen_layout='bucketed' stores the seen set as a url_hash-bucketed
     external table (state.SnapshotStore bucketed mode): every later
@@ -1033,28 +1037,9 @@ def bootstrap(
     maybe-seen side is exchanged into the bucket partitioning. At cluster
     scale pick seen_buckets ~ total cores (e.g. 4096); the Iceberg analog
     is a bucket(N, url_hash) partition transform + storage-partitioned
-    joins."""
-    if seen_layout not in ("append", "bucketed"):
-        # the layout is pinned forever in the manifest — a typo silently
-        # coerced to 'append' would only surface as a scale regression
-        raise ValueError(f"seen_layout must be 'append' or 'bucketed', got {seen_layout!r}")
-    fr = seeds_to_frontier(seeds).select(*FRONTIER_COLS).persist()
-    # counted before the writes: the bloom is sized from the count (and
-    # the writes then read the cached rows)
-    n = fr.count()
-    seen_mode = "bucketed" if seen_layout == "bucketed" else "append"
-    store.write_many(
-        [
-            Write("frontier", fr, 0, "append", rows=n),
-            Write(
-                "seen", fr.select("url_hash", "host_hash", F.lit(0).alias("generation")),
-                0, seen_mode, rows=n,
-            ),
-            bloom_entry(fr.select("url_hash"), n, 0),
-        ],
-        bucket_specs={"seen": (["url_hash"], seen_buckets)},
-    )
-    fr.unpersist()
+    joins. Any other layout name raises ValueError."""
+    # a fresh store has no head cache yet, so the cap is never used
+    n = admit_seeds(spark, store, seeds, 0, head_cap(), seen_layout, seen_buckets)
     return {"generation": 0, "seeded": n}
 
 

@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import frontier
-from .seen import SeenSide
-from .state import SnapshotStore, Write
+from .state import SnapshotStore
 
 SEED_SCHEMA = "url string, priority int, seq long"
 
@@ -53,32 +52,12 @@ def start_frontier_stream(
             frontier.bootstrap(spark, store, batch_df, seen_layout, seen_buckets)
             gen_now = 0
         elif batch_df.take(1):
-            new_rows = frontier.seeds_to_frontier(batch_df).select(*frontier.FRONTIER_COLS)
-            side = SeenSide(spark, store)
-            unseen_new = new_rows.join(
-                side.seen.select("url_hash"), "url_hash", "left_anti"
-            ).persist()
             # frontier + seen-side tables are delta logs: merging a seed
-            # batch is one atomic append of the genuinely-new rows, not a
-            # rewrite (SeenSide.admit keeps every seen-side index current)
-            n_new = unseen_new.count()
-            writes = [Write("frontier", unseen_new, gen_now, "append", rows=n_new)]
-            writes += side.admit(unseen_new, n_new, gen_now)
-            # merge the new seeds into the scheduler head cache too — the
-            # head must see every pending row that could make a host's
-            # top-B before the next full refill (no head yet: the next
-            # generation builds it from pending). A host holds at most
-            # head_cap head rows plus the batch's new ones.
-            head = store.read_or_none(spark, "head")
-            if head is not None:
-                cap = frontier.head_cap(**sched_kwargs)
-                merged = frontier.top_per_host(
-                    head.select(*frontier.FRONTIER_COLS).unionByName(unseen_new),
-                    cap, max_host_rows=cap + n_new,
-                )
-                writes.append(("head", merged, gen_now, "snapshot"))
-            store.write_many(writes)
-            unseen_new.unpersist()
+            # batch is one atomic append of the genuinely-new rows (and a
+            # head merge), not a rewrite
+            frontier.admit_seeds(
+                spark, store, batch_df, gen_now, frontier.head_cap(**sched_kwargs)
+            )
         frontier.run_generation(spark, store, documents, gen_now + 1, **sched_kwargs)
 
     return (

@@ -21,7 +21,7 @@ def test_bloom_matches_exact(spark):
         "url_hash", "host_hash", F.lit(0).alias("generation")
     )
     exact = seen_mod.filter_unseen(cands, seen_tbl, use_bloom=False)
-    bloom = seen_mod.filter_unseen(cands, seen_tbl, use_bloom=True, n_buckets=8)
+    bloom = seen_mod.filter_unseen(cands, seen_tbl, use_bloom=True)
     a = sorted(r["url_hash"] for r in exact.select("url_hash").collect())
     b = sorted(r["url_hash"] for r in bloom.select("url_hash").collect())
     assert a == b
@@ -42,7 +42,7 @@ def test_prebuilt_index_matches_exact(spark):
     )
     exact = seen_mod.filter_unseen(cands, seen_tbl, use_bloom=False)
     pre = seen_mod.filter_unseen(
-        cands, seen_tbl, use_bloom=True, n_buckets=8, exact_join="prebuilt"
+        cands, seen_tbl, use_bloom=True, exact_join="prebuilt"
     )
     a = sorted(r["url_hash"] for r in exact.select("url_hash").collect())
     b = sorted(r["url_hash"] for r in pre.select("url_hash").collect())
@@ -60,18 +60,14 @@ def test_merge_exact_index_unions_deltas(spark):
     ).persist()
     a = cands.filter(F.col("seq") % 2 == 0).select("url_hash")
     b = cands.filter(F.col("seq") % 2 == 1).select("url_hash")
-    deltas = seen_mod.build_exact_index(a, n_buckets=8).unionByName(
-        seen_mod.build_exact_index(b, n_buckets=8)
-    )
+    deltas = seen_mod.build_exact_index(a).unionByName(seen_mod.build_exact_index(b))
     merged = {
         r["bucket"]: r["keys"]
         for r in seen_mod.merge_exact_index(deltas).collect()
     }
     full = {
         r["bucket"]: r["keys"]
-        for r in seen_mod.build_exact_index(
-            cands.select("url_hash"), n_buckets=8
-        ).collect()
+        for r in seen_mod.build_exact_index(cands.select("url_hash")).collect()
     }
     assert merged == full
     cands.unpersist()
@@ -124,15 +120,13 @@ def test_merge_bloom_or_reduces_deltas(spark):
     ).persist()
     a = cands.filter(F.col("seq") % 2 == 0).select("url_hash")
     b = cands.filter(F.col("seq") % 2 == 1).select("url_hash")
-    deltas = seen_mod.build_bloom(a, n_buckets=8).unionByName(
-        seen_mod.build_bloom(b, n_buckets=8)
-    )
+    deltas = seen_mod.build_bloom(a).unionByName(seen_mod.build_bloom(b))
     merged = {
         r["bucket"]: r["bitmap"] for r in seen_mod.merge_bloom(deltas).collect()
     }
     full = {
         r["bucket"]: r["bitmap"]
-        for r in seen_mod.build_bloom(cands.select("url_hash"), n_buckets=8).collect()
+        for r in seen_mod.build_bloom(cands.select("url_hash")).collect()
     }
     assert merged == full
     cands.unpersist()
@@ -261,16 +255,38 @@ def test_legacy_unsized_bloom_is_rebuilt_at_next_admit(spark):
     docs.unpersist()
 
 
+def test_seen_side_admits_into_a_fresh_store(spark):
+    """SeenSide takes a store that holds no tables yet: admit writes the
+    seen rows and a bloom sized for twice their count, and no exact
+    index — the seen side bootstrap writes."""
+    rows = spark.range(300).select(
+        F.xxhash64("id").alias("url_hash"), (F.col("id") % 7).alias("host_hash")
+    )
+    with tempfile.TemporaryDirectory() as d:
+        store = SnapshotStore(d)
+        store.write_many(seen_mod.SeenSide(spark, store).admit(rows, 300, 0))
+        seen = store.read(spark, "seen")
+        assert seen.count() == 300
+        assert seen.select("url_hash", "host_hash").subtract(rows).count() == 0
+        assert store.table_meta("bloom") == {
+            "keys": 300, "bits_per_bucket": seen_mod.bloom_bits(600) // 64,
+        }
+        assert store.read_or_none(spark, "exact_index") is None
+        bloom = seen_mod.merge_bloom(store.read(spark, "bloom"))
+        tagged = seen_mod.bloom_filter_candidates(rows, bloom)
+        assert tagged.filter(~F.col("maybe_seen")).count() == 0
+
+
 def test_collect_bitmap_rejects_mixed_geometries(spark):
     """A bloom frame mixing bitmap lengths has no single geometry to probe
     with: the collect names the lengths instead of failing on a numpy
     shape error."""
     keys = spark.range(200).select(F.xxhash64("id").alias("url_hash"))
-    mixed = seen_mod.build_bloom(keys, n_buckets=8, bits_per_bucket=1 << 10).unionByName(
-        seen_mod.build_bloom(keys, n_buckets=8, bits_per_bucket=1 << 12)
+    mixed = seen_mod.build_bloom(keys, bits_per_bucket=1 << 10).unionByName(
+        seen_mod.build_bloom(keys, bits_per_bucket=1 << 12)
     )
     with pytest.raises(ValueError, match=r"\[128, 512\]"):
-        seen_mod.filter_unseen(keys, keys, n_buckets=8, bloom=mixed)
+        seen_mod.filter_unseen(keys, keys, bloom=mixed)
 
 
 def test_politeness_budget_and_order(spark):
@@ -1247,7 +1263,8 @@ def test_generation_leaves_cache_as_found(spark, caplog):
         for regime, s in (("window", store), ("split", SnapshotStore(d2))):
             before = entries()
             caplog.clear()
-            with caplog.at_level(logging.INFO, logger="post_processor_spark.frontier"):
+            with caplog.at_level(logging.INFO, logger="post_processor_spark.frontier"), \
+                    caplog.at_level(logging.INFO, logger="post_processor_spark.seen"):
                 results[regime] = frontier.run_generation(spark, s, docs, 1, **opts)
             assert entries() == before, regime
             assert results[regime]["rank_plans"] == {"schedule": regime, "head": "window"}
@@ -1255,6 +1272,10 @@ def test_generation_leaves_cache_as_found(spark, caplog):
                     if r.name == "post_processor_spark.frontier"]
             assert len(msgs) == 2 and all("skew threshold 4096" in m for m in msgs), msgs
             assert f"politeness_schedule: {regime} plan" in msgs[0], msgs
+            # one seen-side record a generation: the plan and what it merged
+            [seen_msg] = [r.getMessage() for r in caplog.records
+                          if r.name == "post_processor_spark.seen"]
+            assert "prebuilt plan, merged bloom, exact_index; bloom delta" in seen_msg
         keep = ("scheduled", "discovered", "new", "rows_written")
         assert [results["window"][k] for k in keep] == [results["split"][k] for k in keep]
     docs.unpersist()
